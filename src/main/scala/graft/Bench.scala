@@ -1,30 +1,11 @@
 package graft
 
-/** Benchmark main. Two execution shapes share one measurement core:
-  *
-  *  - SINGLE-SESSION (focused probes, `GRAFT_BENCH_SINGLE_JVM=1`, or any
-  *    selection that fits one block): exactly the shape every committed
-  *    floor sidecar was measured in — unchanged, so floors stay
-  *    comparable round over round.
-  *  - PER-BLOCK JVM ISOLATION (default for full-surface runs, round 18):
-  *    the coordinator splits [[SessionMemos.benchOrder]] into
-  *    family-atomic blocks of ≤ `GRAFT_BENCH_BLOCK_SIZE` queries and runs
-  *    each block in a FRESH child JVM, merging the block sidecars into
-  *    the usual contract lines. Rationale: the round-17 bisect pinned a
-  *    ~30–60 s in-run tax (driver BENCH_r17 224 s vs same-code 138.5 s
-  *    close) to intra-JVM memory-system aftermath of heavy predecessors —
-  *    a single-JVM local[32] artifact that separate executor processes
-  *    (any real deployment) don't have; every in-JVM knob (GC, IHOP,
-  *    heap, inter-query GC) was measured useless (BASELINE round 17). A
-  *    block's aftermath now dies with its process; the N× session
-  *    startup is reported off-clock (`jvm_overhead_s`).
-  *
-  * A child session is selected by `GRAFT_BENCH_CHILD_OUT=<path>`: it
-  * runs its `GRAFT_BENCH_ONLY` block exactly like a focused probe but
-  * writes its full sidecar JSON to that path (no stdout contract lines,
-  * no bench_last.json/bench/ writes, no load-gate wait — the parent
-  * gated once; a child re-gating would false-trip on the load its own
-  * predecessor blocks induced).
+/** Benchmark main: every selected query runs in ONE Spark session, in
+  * [[SessionMemos.benchOrder]], timed best-of-2 after the one-time
+  * fixture builds (reported off-clock in their own fields). Scaled runs
+  * (`GRAFT_BENCH_SCALE`) take the same path over the replicated corpus.
+  * Prints the two stdout contract lines and writes the per-query sidecar
+  * (`bench_last.json` plus an append-only copy under `bench/`).
   */
 object Bench {
 
@@ -78,9 +59,9 @@ object Bench {
   private def fmt(v: Double): String =
     if (v < 0) "-1" else "%.3f".formatLocal(java.util.Locale.ROOT, v)
 
-  // the one-time fixture-build fields, in contract order — the coordinator
-  // sums them across child blocks so each keeps meaning exactly what it
-  // meant in BENCH_r01-r17 (the named build alone, off-clock)
+  // the one-time fixture-build fields, in contract order — each keeps
+  // meaning exactly what it meant since BENCH_r01 (the named build alone,
+  // off-clock)
   private val FixtureFields: Seq[String] = Seq(
     "bucketed_fixture_s", "orc_fixture_s", "variant_fixture_s",
     "ann_index_fixture_s", "dpp_fixture_s", "ann_rank_fixture_s",
@@ -170,219 +151,8 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val selected = selectedNames()
-    val childOut = sys.env.get("GRAFT_BENCH_CHILD_OUT")
-    // Isolation granularity is a measured trade (r18 A/B, all committed):
-    // a fresh child JVM taxes every query ~0.05–0.3 s while C2 re-warms
-    // Spark's core paths — a CONSTANT that dwarfs sub-second sf0.1
-    // queries (blocks-of-16 read +41 s over the single-JVM shape at
-    // quiet steal, bench_r18_sf01_multijvm3 vs _single1; quiet-window
-    // median tax halves again at 64, _block64) but vanishes against
-    // 5–30 s ×100 queries, where the intra-JVM aftermath the isolation
-    // kills (~30–60 s/session, BASELINE r17 bisect) is the dominant
-    // artifact. Default: 64 per block unscaled (3 JVMs, aftermath
-    // bounded per ~60 queries), 16 when GRAFT_BENCH_SCALE is set.
-    val blockSize = Knobs.envInt("GRAFT_BENCH_BLOCK_SIZE",
-      if (scaleFactor().isDefined) 16 else 64, 1, 10000)
-    // Round 19 (verdict task 1): the full-surface UNSCALED default is
-    // single-JVM again. On the driver's host the block mode that shipped
-    // in r18 produced 625 s of untimed overhead on a 235 s timed total
-    // and roaming 2–40× per-query pockets the builder's host never showed
-    // (text_repetition 25.2 s driver vs 0.57 s same-code sidecar) — each
-    // fresh child commits an Xms-pinned 8 GB heap, and on a host with
-    // guest free-page reporting that page-faulting is exactly the
-    // documented slow path (build.sbt heap note), multiplied by N blocks
-    // and tripled CPU exposure from the per-query warm pass. At sf0.1 the
-    // artifact the isolation kills (~30–60 s/session intra-JVM aftermath)
-    // is smaller than the isolation's own driver-host cost, so unscaled
-    // runs take the stable shape and SCALED runs (5–30 s/query, where the
-    // aftermath dominates and the per-child constant vanishes) keep
-    // per-block isolation. GRAFT_BENCH_SINGLE_JVM=0|1 still forces either
-    // shape explicitly.
-    val singleJvm = sys.env.get("GRAFT_BENCH_SINGLE_JVM") match {
-      case Some(v) => v == "1"
-      case None => scaleFactor().isEmpty
-    }
-    // focused probes (≤ one block) keep the single-session shape their
-    // committed floor sidecars were measured in
-    if (childOut.isDefined || singleJvm || selected.size <= blockSize)
-      runSession(selected, childOut)
-    else coordinate(selected, blockSize)
-  }
-
-  /** Spawn one child JVM per family-atomic block and merge the block
-    * sidecars into the usual contract lines + sidecar files.
-    */
-  private def coordinate(selected: Set[String], blockSize: Int): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val (load1Start, load5Start, contended, waits) = loadGate()
-    val (runSteal0, runTotal0) = cpuJiffies()
-    // the parent pays any scaled-corpus GENERATION exactly once, before
-    // any child starts — children then obtain a store hit in ~ms
-    val scale = scaleFactor()
-    var corpusFixtureSecs = 0.0
-    scale.foreach { f =>
-      val t0 = System.nanoTime()
-      val root = ScaleUp.obtainScaled(sfDir, f)
-      corpusFixtureSecs = (System.nanoTime() - t0) / 1e9
-      System.err.println(
-        f"[bench] scaled corpus (×$f) at $root (obtain $corpusFixtureSecs%.1f s)")
-    }
-    // family-atomic chunking: a unit (one memo family's consumers, or a
-    // singleton) never splits across JVMs — the family memo must build
-    // and release within one session
-    val units = SessionMemos.benchUnits(selected)
-    val blocks = scala.collection.mutable.ArrayBuffer.empty[Seq[String]]
-    var cur = scala.collection.mutable.ArrayBuffer.empty[String]
-    units.foreach { u =>
-      if (cur.nonEmpty && cur.size + u.size > blockSize) {
-        blocks += cur.toSeq; cur = scala.collection.mutable.ArrayBuffer.empty
-      }
-      cur ++= u
-    }
-    if (cur.nonEmpty) blocks += cur.toSeq
-    System.err.println(
-      s"[bench] per-block JVM isolation: ${blocks.size} blocks of ${blocks.map(_.size).mkString("/")} queries")
-    // child JVMs inherit exactly the parent's flags (build.sbt javaOptions
-    // arrive verbatim via the RuntimeMXBean) and classpath — sbt's forked
-    // run passes the real -classpath, verified to contain the Spark jars
-    import scala.jdk.CollectionConverters._
-    val javaBin = java.nio.file.Paths.get(
-      System.getProperty("java.home"), "bin", "java").toString
-    val jvmArgs = java.lang.management.ManagementFactory.getRuntimeMXBean
-      .getInputArguments.asScala.toSeq
-    val cp = System.getProperty("java.class.path")
-    require(cp != null && cp.contains("spark"),
-      "java.class.path lacks the Spark jars — run with GRAFT_BENCH_SINGLE_JVM=1")
-    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-    val passes = scala.collection.mutable.LinkedHashMap.empty[String, (Double, Double)]
-    val storageAfter = scala.collection.mutable.LinkedHashMap.empty[String, Double]
-    val stealPct = scala.collection.mutable.LinkedHashMap.empty[String, Double]
-    val fixtures = scala.collection.mutable.LinkedHashMap(
-      FixtureFields.map(_ -> 0.0): _*)
-    fixtures("corpus_fixture_s") = corpusFixtureSecs
-    var childWallSum = 0.0
-    def runChild(only: Seq[String], outFile: java.nio.file.Path,
-        fixturesOnly: Boolean, label: String): Int = {
-      val cmd = (Seq(javaBin) ++ jvmArgs ++ Seq("-cp", cp, "graft.Bench")).asJava
-      val pb = new ProcessBuilder(cmd)
-      pb.environment().put("GRAFT_BENCH_ONLY", only.mkString(","))
-      pb.environment().put("GRAFT_BENCH_CHILD_OUT", outFile.toString)
-      if (fixturesOnly) pb.environment().put("GRAFT_BENCH_FIXTURES_ONLY", "1")
-      pb.environment().remove("GRAFT_BENCH_TAG")
-      // child stderr (Spark logs) flows through as today; child stdout is
-      // discarded — the contract lines are the COORDINATOR's to print
-      pb.redirectErrorStream(false)
-      pb.redirectError(ProcessBuilder.Redirect.INHERIT)
-      pb.redirectOutput(ProcessBuilder.Redirect.DISCARD)
-      val t0 = System.nanoTime()
-      val rc = try pb.start().waitFor()
-      catch { case e: Throwable =>
-        System.err.println(s"[bench] $label spawn failed: $e"); -1 }
-      childWallSum += (System.nanoTime() - t0) / 1e9
-      rc
-    }
-    // ALL one-time fixture builds run in their own child JVM BEFORE any
-    // measurement block: a fresh jar flips the content stamps, and a
-    // 50 s rank-fixture rebuild inside a measurement JVM poisons that
-    // block's timed windows with its memory-system aftermath (the same
-    // mechanism the per-block isolation exists to kill — observed as
-    // quiet-steal 6–10× inflation on the block's late queries in
-    // bench_r18_sf01_multijvm2). The build seconds land in the contract's
-    // fixture fields from THIS child alone; the measurement blocks then
-    // obtain store hits, whose ~0.1 s serve costs are deliberately NOT
-    // folded in (the fields mean "the named build alone" since r01).
-    var fixturesFromChild = false
-    locally {
-      val outFile = java.nio.file.Files.createTempFile("graft_bench_fx", ".json")
-      java.nio.file.Files.deleteIfExists(outFile)
-      val rc = runChild(selected.toSeq.sorted, outFile, fixturesOnly = true,
-        label = "fixture build")
-      if (rc == 0) {
-        try {
-          val root = mapper.readTree(java.nio.file.Files.readAllBytes(outFile))
-          FixtureFields.foreach { f =>
-            val v = root.get(f)
-            if (v != null && v.asDouble(0.0) > 0) fixtures(f) += v.asDouble(0.0)
-          }
-          fixturesFromChild = true
-        } catch { case e: Throwable =>
-          System.err.println(s"[bench] fixture-build sidecar unreadable: $e") }
-      } else System.err.println(
-        s"[bench] fixture-build child exited rc=$rc — blocks will build inline")
-      java.nio.file.Files.deleteIfExists(outFile)
-      System.err.println("[bench] fixture build done")
-    }
-    blocks.zipWithIndex.foreach { case (block, i) =>
-      val outFile = java.nio.file.Files.createTempFile("graft_bench_block", ".json")
-      java.nio.file.Files.deleteIfExists(outFile)
-      val rc = runChild(block, outFile, fixturesOnly = false,
-        label = s"block ${i + 1}")
-      val parsed =
-        if (rc != 0) { System.err.println(
-          s"[bench] block ${i + 1}/${blocks.size} exited rc=$rc — marking its ${block.size} queries failed"); None }
-        else try Some(mapper.readTree(java.nio.file.Files.readAllBytes(outFile)))
-        catch { case e: Throwable =>
-          System.err.println(s"[bench] block ${i + 1} sidecar unreadable: $e"); None }
-      parsed match {
-        case Some(root) =>
-          val p = root.get("passes"); val st = root.get("storage_after_mb")
-          val sp = root.get("steal_pct")
-          block.foreach { name =>
-            val arr = if (p != null) p.get(name) else null
-            passes(name) =
-              if (arr == null) (-1.0, -1.0)
-              else (arr.get(0).asDouble(-1.0), arr.get(1).asDouble(-1.0))
-            storageAfter(name) =
-              if (st != null && st.get(name) != null) st.get(name).asDouble(-1.0) else -1.0
-            stealPct(name) =
-              if (sp != null && sp.get(name) != null) sp.get(name).asDouble(-1.0) else -1.0
-          }
-          if (!fixturesFromChild) FixtureFields.foreach { f =>
-            val v = root.get(f)
-            if (v != null && v.asDouble(0.0) > 0) fixtures(f) += v.asDouble(0.0)
-          }
-        case None =>
-          block.foreach { name =>
-            passes(name) = (-1.0, -1.0); storageAfter(name) = -1.0
-            stealPct(name) = -1.0
-          }
-      }
-      java.nio.file.Files.deleteIfExists(outFile)
-      System.err.println(s"[bench] block ${i + 1}/${blocks.size} done")
-    }
-    val results = passes.toSeq.map { case (name, (p1, p2)) =>
-      name -> (if (p1 < 0 || p2 < 0) -1.0 else math.min(p1, p2))
-    }
-    val totalP1 = passes.valuesIterator.map(_._1).filter(_ >= 0).sum
-    // everything the blocks spent beyond timed passes + fixture builds:
-    // N× session startup, warmups, obtain hits — off-clock by design,
-    // reported so the isolation's cost stays visible
-    val accounted = passes.valuesIterator
-      .map { case (p1, p2) => math.max(p1, 0) + math.max(p2, 0) }.sum +
-      fixtures.valuesIterator.sum - corpusFixtureSecs
-    val overhead = math.max(0.0, childWallSum - accounted)
-    val (load1End, load5End) = loadAvg()
-    val (runSteal1, runTotal1) = cpuJiffies()
-    val runStealPct =
-      if (runSteal0 < 0 || runSteal1 < 0 || runTotal1 <= runTotal0) -1.0
-      else 100.0 * (runSteal1 - runSteal0).toDouble / (runTotal1 - runTotal0)
-    emit(results, passes.toMap, storageAfter, stealPct, fixtures,
-      sfJson(sfDir, scale), totalP1,
-      load1Start, load5Start, load1End, load5End, runStealPct, contended,
-      waits, extraFields =
-        s""","jvm_blocks":${blocks.size},"jvm_overhead_s":${fmt(overhead)}""")
-  }
-
-  /** One measured session: the focused-probe / child-block / opt-out
-    * single-JVM shape (exactly the round-17 measurement core).
-    */
-  private def runSession(selected: Set[String], childOut: Option[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    // a child does NOT re-gate: the parent gated once, and a child's gate
-    // would false-trip on the load its own predecessor blocks induced
-    val (load1Start, load5Start, contended, waits) =
-      if (childOut.isDefined) { val l = loadAvg(); (l._1, l._2, false, 0) }
-      else loadGate()
     val scale = scaleFactor()
     var corpusFixtureSecs = 0.0
     val effDir = scale match {
@@ -407,21 +177,13 @@ object Bench {
     def exec(name: String): Unit =
       SparkEntry.queries(name)(spark, effDir).queryExecution.toRdd
         .foreach(_ => ())
-    // GRAFT_BENCH_FIXTURES_ONLY=1 (the coordinator's fixture-build
-    // child): build every one-time fixture the selection needs, report
-    // their seconds in the sidecar, and run NO timed passes — the
-    // measurement blocks that follow obtain store hits, so no build's
-    // memory-system aftermath ever shares a JVM with a timed window.
-    val fixturesOnly = sys.env.get("GRAFT_BENCH_FIXTURES_ONLY").contains("1")
     // Warm the JVM once (codegen compiler, parquet reader, shuffle, join
     // machinery) so the first timed query doesn't absorb session startup.
     // Warm against the bench's OWN data dir — a hardcoded path could be
     // absent and silently skip the warmup, skewing the first timed query.
-    if (!fixturesOnly) {
-      try exec("combine")
-      catch { case e: Throwable => System.err.println(s"[bench] warmup failed: $e") }
-      Scratch.release(spark)
-    }
+    try exec("combine")
+    catch { case e: Throwable => System.err.println(s"[bench] warmup failed: $e") }
+    Scratch.release(spark)
     // bucketed_join exists to demonstrate the exchange-free join; its
     // bucketed-table LAYOUT write is one-time amortized cost, not query
     // cost — build the fixture here and report its seconds separately so
@@ -526,23 +288,6 @@ object Bench {
         .exists(selected.contains)) {
         graft.operators.TextAnalysis.bigramFixtureWrite(spark, effDir); ()
       }
-    if (fixturesOnly) {
-      val (load1End, load5End) = loadAvg()
-      childOut match {
-        case Some(path) =>
-          val sidecar = sidecarJson(Seq.empty, Map.empty,
-            collection.Map.empty, collection.Map.empty, fixtures,
-            sfJson(sfDir, scale), 0.0, load1Start, load5Start, load1End,
-            load5End, -1.0, contended, waits, extraFields = "")
-          java.nio.file.Files.write(java.nio.file.Paths.get(path),
-            sidecar.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-        case None => System.err.println(
-          "[bench] GRAFT_BENCH_FIXTURES_ONLY outside child mode: fixtures " +
-            "built, nothing to emit")
-      }
-      spark.stop()
-      return
-    }
     // Each query is timed BEST-OF-2: two independent passes, report the
     // min. A single pass conflates the query's cost with whatever the
     // host happened to be doing in that window — rounds 5-8 each spent
@@ -584,32 +329,7 @@ object Bench {
     // or the window saw no jiffies at all
     val stealPct = scala.collection.mutable.LinkedHashMap.empty[String, Double]
     val (runSteal0, runTotal0) = cpuJiffies()
-    // GRAFT_BENCH_GC_BETWEEN=1: a full GC in the UNTIMED gap before each
-    // query — it lets the ContextCleaner reap the previous query's
-    // shuffle files/broadcasts (cleanup keys off reference GC) so a
-    // heavy predecessor's multi-GB residue doesn't bill the next timed
-    // window. Experiment knob (round-17 in-run-tax bisects), default off.
-    val gcBetween = sys.env.get("GRAFT_BENCH_GC_BETWEEN").contains("1")
-    // Child-block warm pass: a fresh child JVM's C2 compiler is still
-    // warming Spark's core paths (scan, exchange, codegen driver) for the
-    // whole block — measured ~0.2–0.4 s of tax on EVERY sf0.1 query even
-    // on its second pass (bench_r18_sf01_multijvm1 vs _single1: +42 s
-    // across 184 queries, spread broadly, not block-fronted). One untimed
-    // pre-pass per query restores the warm posture every committed floor
-    // was measured in; its cost lands in the coordinator's off-clock
-    // jvm_overhead_s. Child-mode only (focused probes keep the exact
-    // round-17 shape their floor sidecars were measured in);
-    // GRAFT_BENCH_CHILD_WARMUP=0 opts out for A/B probes.
-    val warmPass = childOut.isDefined &&
-      !sys.env.get("GRAFT_BENCH_CHILD_WARMUP").contains("0")
     val passes = ordered.map { name =>
-      if (gcBetween) { System.gc(); Thread.sleep(500) }
-      if (warmPass) {
-        try exec(name)
-        catch { case e: Throwable =>
-          System.err.println(s"[bench] warm pass $name failed: $e") }
-        Scratch.release(spark)
-      }
       val (s0, t0) = cpuJiffies()
       val p1 = timedPass(name)
       // don't pay for a second pass of a failing query — the failure is
@@ -642,22 +362,10 @@ object Bench {
     val runStealPct =
       if (runSteal0 < 0 || runSteal1 < 0 || runTotal1 <= runTotal0) -1.0
       else 100.0 * (runSteal1 - runSteal0).toDouble / (runTotal1 - runTotal0)
-    childOut match {
-      case Some(path) =>
-        // child contract: the full sidecar JSON to the coordinator's
-        // temp path, nothing to stdout, no bench_last.json/bench/ writes
-        val sidecar = sidecarJson(results, passes.toMap, storageAfter,
-          stealPct, fixtures, sfJson(sfDir, scale), totalP1,
-          load1Start, load5Start, load1End, load5End, runStealPct,
-          contended, waits, extraFields = "")
-        java.nio.file.Files.write(java.nio.file.Paths.get(path),
-          sidecar.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      case None =>
-        emit(results, passes.toMap, storageAfter, stealPct, fixtures,
-          sfJson(sfDir, scale), totalP1,
-          load1Start, load5Start, load1End, load5End, runStealPct,
-          contended, waits, extraFields = "")
-    }
+    emit(results, passes.toMap, storageAfter, stealPct, fixtures,
+      sfJson(sfDir, scale), totalP1,
+      load1Start, load5Start, load1End, load5End, runStealPct,
+      contended, waits)
     // end-of-session memo teardown — see Dedup.releaseSession
     graft.operators.Dedup.releaseSession(spark)
     graft.operators.Similarity.releaseSession(spark)
@@ -667,50 +375,7 @@ object Bench {
     spark.stop()
   }
 
-  private def loadFieldsJson(load1Start: Double, load5Start: Double,
-      load1End: Double, load5End: Double, runStealPct: Double,
-      contended: Boolean, waits: Int): String =
-    s""""load1_start":${fmt(load1Start)},"load5_start":${fmt(load5Start)},""" +
-      s""""load1_end":${fmt(load1End)},"load5_end":${fmt(load5End)},""" +
-      s""""steal_pct_run":${"%.2f".formatLocal(java.util.Locale.ROOT, runStealPct)},""" +
-      s""""contended":$contended,"load_wait_s":${waits * 20}"""
-
-  private def sidecarJson(results: Seq[(String, Double)],
-      passes: Map[String, (Double, Double)],
-      storageAfter: collection.Map[String, Double],
-      stealPct: collection.Map[String, Double],
-      fixtures: collection.Map[String, Double],
-      sf: String, totalP1: Double,
-      load1Start: Double, load5Start: Double, load1End: Double,
-      load5End: Double, runStealPct: Double, contended: Boolean,
-      waits: Int, extraFields: String): String = {
-    val total = results.map(_._2).filter(_ >= 0).sum
-    val failedCount = results.count(_._2 < 0)
-    val qs = results.map { case (k, v) => s"\"" + k + "\":" + fmt(v) }
-      .mkString("{", ",", "}")
-    val raw = results.map { case (k, _) =>
-      val (p1, p2) = passes(k); s"\"" + k + s"\":[$p1,$p2]"
-    }.mkString("{", ",", "}")
-    val storageJson = results.map { case (k, _) =>
-      s"\"" + k + "\":" + "%.1f".formatLocal(java.util.Locale.ROOT,
-        storageAfter.getOrElse(k, -1.0))
-    }.mkString("{", ",", "}")
-    val stealJson = results.map { case (k, _) =>
-      s"\"" + k + "\":" + "%.2f".formatLocal(java.util.Locale.ROOT,
-        stealPct.getOrElse(k, -1.0))
-    }.mkString("{", ",", "}")
-    val fixtureJson = FixtureFields
-      .map(f => s"\"$f\":${fixtures.getOrElse(f, 0.0)}").mkString(",")
-    val loadFields = loadFieldsJson(load1Start, load5Start, load1End,
-      load5End, runStealPct, contended, waits)
-    s"""{"total_s":$total,"n":${results.size},"failed":$failedCount,"sf":$sf,"timing":"best_of_2","total_p1_s":$totalP1,$loadFields$extraFields,""" +
-      s"""$fixtureJson,""" +
-      s""""queries":$qs,"passes":$raw,"storage_after_mb":$storageJson,"steal_pct":$stealJson}"""
-  }
-
-  /** Print the two stdout contract lines and write the sidecar files —
-    * identical shape whether the run was one session or N child blocks.
-    */
+  /** Print the two stdout contract lines and write the sidecar files. */
   private def emit(results: Seq[(String, Double)],
       passes: Map[String, (Double, Double)],
       storageAfter: collection.Map[String, Double],
@@ -719,13 +384,20 @@ object Bench {
       sf: String, totalP1: Double,
       load1Start: Double, load5Start: Double, load1End: Double,
       load5End: Double, runStealPct: Double, contended: Boolean,
-      waits: Int, extraFields: String): Unit = {
+      waits: Int): Unit = {
     val total = results.map(_._2).filter(_ >= 0).sum
     val failedCount = results.count(_._2 < 0)
+    // one JSON object keyed by query name, in execution order
+    def perQuery(v: String => String): String =
+      results.map { case (k, _) => s"\"" + k + "\":" + v(k) }
+        .mkString("{", ",", "}")
     val qs = results.map { case (k, v) => s"\"" + k + "\":" + fmt(v) }
       .mkString("{", ",", "}")
-    val loadFields = loadFieldsJson(load1Start, load5Start, load1End,
-      load5End, runStealPct, contended, waits)
+    val loadFields =
+      s""""load1_start":${fmt(load1Start)},"load5_start":${fmt(load5Start)},""" +
+        s""""load1_end":${fmt(load1End)},"load5_end":${fmt(load5End)},""" +
+        s""""steal_pct_run":${"%.2f".formatLocal(java.util.Locale.ROOT, runStealPct)},""" +
+        s""""contended":$contended,"load_wait_s":${waits * 20}"""
     val fixtureJson = FixtureFields
       .map(f => s"\"$f\":${fmt(fixtures.getOrElse(f, 0.0))}").mkString(",")
     // the long per-query line is INFORMATIONAL and goes FIRST: ten rounds
@@ -739,16 +411,24 @@ object Bench {
     // can clip it), per-query detail lives in the bench_last.json sidecar
     println(s"""{"metric":"total","value":${fmt(total)},"unit":"sec","n":${
       results.size},"failed":$failedCount,"sf":$sf,"total_p1_s":${
-      fmt(totalP1)},$fixtureJson,$loadFields$extraFields}""")
+      fmt(totalP1)},$fixtureJson,$loadFields}""")
     System.out.flush()
     // sidecar file: BENCH_r07/r08 both captured "parsed": null because
     // the stdout tail clipped the per-query map mid-JSON. A file on disk
     // cannot be truncated by a capture window — write the full per-query
     // result (min + both raw passes) there as the durable record.
     try {
-      val sidecar = sidecarJson(results, passes, storageAfter, stealPct,
-        fixtures, sf, totalP1, load1Start, load5Start, load1End, load5End,
-        runStealPct, contended, waits, extraFields)
+      val raw = perQuery { k => val (p1, p2) = passes(k); s"[$p1,$p2]" }
+      val storageJson = perQuery(k => "%.1f".formatLocal(java.util.Locale.ROOT,
+        storageAfter.getOrElse(k, -1.0)))
+      val stealJson = perQuery(k => "%.2f".formatLocal(java.util.Locale.ROOT,
+        stealPct.getOrElse(k, -1.0)))
+      val fixtureRaw = FixtureFields
+        .map(f => s"\"$f\":${fixtures.getOrElse(f, 0.0)}").mkString(",")
+      val sidecar =
+        s"""{"total_s":$total,"n":${results.size},"failed":$failedCount,"sf":$sf,"timing":"best_of_2","total_p1_s":$totalP1,$loadFields,""" +
+          s"""$fixtureRaw,""" +
+          s""""queries":$qs,"passes":$raw,"storage_after_mb":$storageJson,"steal_pct":$stealJson}"""
       java.nio.file.Files.write(
         java.nio.file.Paths.get("bench_last.json"),
         sidecar.getBytes(java.nio.charset.StandardCharsets.UTF_8))

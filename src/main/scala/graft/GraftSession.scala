@@ -70,9 +70,8 @@ object GraftSession {
       // for the fact joins (guide §3.1/§9; measured A/B at ×100, round
       // 19). Partition counts scale with input bytes (derivedPartitions
       // above), so the per-partition build side stays bounded at any
-      // scale; GRAFT_PREFER_SMJ=true restores the sort-merge default.
-      .config("spark.sql.join.preferSortMergeJoin",
-        sys.env.getOrElse("GRAFT_PREFER_SMJ", "false"))
+      // scale.
+      .config("spark.sql.join.preferSortMergeJoin", "false")
       .config("spark.sql.extensions", "graft.plans.GraftSparkExtensions")
       // events.parquet carries TIMESTAMP(NANOS) — read as raw int64 nanos
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")

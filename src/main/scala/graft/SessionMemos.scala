@@ -86,33 +86,18 @@ object SessionMemos {
     * and selection; order within the block and among non-members stays
     * alphabetical.
     */
-  def benchOrder(selected: Set[String]): Seq[String] =
-    benchUnits(selected).flatten
-
-  /** [[benchOrder]] split into its ATOMIC units: each memo family's
-    * selected consumers as one unit, every other query as a singleton.
-    * Concatenated, the units are exactly benchOrder. Bench's per-block
-    * JVM isolation (round 18) chunks these units — a family must never
-    * be split across JVMs, or its memo would build twice and the second
-    * half would bill a rebuild the single-JVM bench never paid.
-    */
-  def benchUnits(selected: Set[String]): Seq[Seq[String]] = {
+  def benchOrder(selected: Set[String]): Seq[String] = {
     val emitted = scala.collection.mutable.LinkedHashSet.empty[String]
-    val units = scala.collection.mutable.ArrayBuffer.empty[Seq[String]]
     selected.toSeq.sorted.foreach { name =>
       if (!emitted.contains(name)) {
         families.find(_.consumers.contains(name)) match {
           case Some(fam) =>
-            val block = fam.consumers.intersect(selected).toSeq.sorted
-            units += block
-            emitted ++= block
-          case None =>
-            units += Seq(name)
-            emitted += name
+            emitted ++= fam.consumers.intersect(selected).toSeq.sorted
+          case None => emitted += name
         }
       }
     }
-    units.toSeq
+    emitted.toSeq
   }
 
   /** Release every family whose LAST selected consumer (the end of its

@@ -1109,49 +1109,6 @@ object Dedup {
   // 100 TB answer on such corpora; exact thresholds belong on bounded
   // slices ([[ngramJaccard]]'s deterministic sample).
 
-  /** EXACT set-similarity join via prefix filtering (the AllPairs /
-    * PPJoin family) over any (doc_id, text) frame: every pair with
-    * word-set Jaccard ≥ 0.8, exactly. The candidate generator is the
-    * classic prefix principle: under one global token order (rarest
-    * document-frequency first, token text as tie-break), any pair
-    * meeting τ MUST share a token inside both documents' first
-    * |x| − ⌈τ·|x|⌉ + 1 tokens, so only prefix-token collisions become
-    * candidates; survivors verify with exact integer arithmetic
-    * (9·inter ≥ 4·(n₁+n₂) ⟺ Jaccard ≥ 0.8 — no float threshold).
-    * Spec-gated (completeness proven against a brute-force pairwise
-    * scan); NOT registered over the benchmark corpus — see the removal
-    * note above. Intended for bounded slices or corpora whose prefix
-    * tokens are genuinely rare.
-    */
-  def prefixJoinPairs(docsDf: DataFrame): DataFrame = {
-    val words = graft.Scratch.track(docsDf
-      .select(col("doc_id"), explode(split(col("text"), " ")).as("w"))
-      .distinct())
-    val sizes = words.groupBy(col("doc_id")).agg(count(lit(1)).as("n"))
-    val dfreq = words.groupBy(col("w")).agg(count(lit(1)).as("dfreq"))
-    val ranked = words.join(dfreq, Seq("w")).join(sizes, Seq("doc_id"))
-      .withColumn("rn", row_number().over(
-        org.apache.spark.sql.expressions.Window
-          .partitionBy(col("doc_id")).orderBy(col("dfreq"), col("w"))))
-      .filter(col("rn") <= col("n") - expr("(4 * n + 4) div 5") + 1)
-      .select(col("doc_id"), col("w"))
-    val cands = ranked.as("a").join(ranked.as("b"),
-        col("a.w") === col("b.w") && col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("id1"), col("b.doc_id").as("id2"))
-      .distinct()
-    val inter = cands
-      .join(words.select(col("doc_id").as("id1"), col("w")), Seq("id1"))
-      .join(words.select(col("doc_id").as("id2"), col("w")), Seq("id2", "w"))
-      .groupBy(col("id1"), col("id2")).agg(count(lit(1)).as("n_common"))
-    inter
-      .join(sizes.select(col("doc_id").as("id1"), col("n").as("n1")), Seq("id1"))
-      .join(sizes.select(col("doc_id").as("id2"), col("n").as("n2")), Seq("id2"))
-      .filter(expr("9 * n_common >= 4 * (n1 + n2)"))
-      .select(col("id1"), col("id2"), col("n_common"), col("n1"), col("n2"),
-        expr("n_common * 1000000L div (n1 + n2 - n_common)").as("jaccard_ppm"))
-      .orderBy(col("id1"), col("id2"))
-  }
-
   /** Incremental MinHash-index maintenance — `incr_agg_merge`'s proof
     * shape applied to the near-dup family: the band-bucket index is built
     * from the PRE-MIDPOINT half of the corpus, the post-midpoint docs
@@ -1239,30 +1196,9 @@ object Dedup {
     baseIndexWrite(s, dir)
     val root = graft.FixtureStore.peek("dedupbase", dir).get
     val mid = s.read.parquet(s"$root/meta").collect()(0).getAs[Long]("mid")
-    // delta_sign_old: the pre-round-18 signing shape (shingle distinct +
-    // 16 min(string)s → Sort + SortAggregate), kept as a same-session A/B
-    // stage so the rewrite's effect is measurable with the host band
-    // cancelled out. NOT used by any registered query.
-    def oldSign(documents: DataFrame): DataFrame = {
-      val toks = documents.select(col("doc_id"), split(col("text"), " ").as("toks"))
-      val shingled = toks.select(col("doc_id"),
-        explode(when(size(col("toks")) >= 3,
-          expr("transform(sequence(0, size(toks) - 3), i -> concat_ws(' ', toks[i], toks[i+1], toks[i+2]))"))
-          .otherwise(array(concat_ws(" ", col("toks"))))).as("sh"))
-        .distinct()
-      val digests = (0 until NumHashes / 4).map(k =>
-        md5(concat(lit(s"mh$k#"), col("sh"))).as(s"d$k"))
-      val withDigests = shingled.select(col("doc_id") +: digests: _*)
-      val minhashes = (0 until NumHashes).map(i =>
-        min(substring(col(s"d${i / 4}"), (i % 4) * 8 + 1, 8)).as(s"h$i"))
-      withDigests.groupBy(col("doc_id")).agg(minhashes.head, minhashes.tail: _*)
-    }
     Seq(
       "delta_sign" -> (() =>
         bandFrameLong(minhashSignatures(docs(s, dir)
-          .filter(col("doc_id") >= mid)))),
-      "delta_sign_old" -> (() =>
-        bandFrameLong(oldSign(docs(s, dir)
           .filter(col("doc_id") >= mid)))),
       "base_scan" -> (() => s.read.parquet(s"$root/baseidx")),
       "bucket_agg" -> (() => s.read.parquet(s"$root/baseidx")

@@ -39,18 +39,6 @@ class SessionMemosSpec extends AnyFunSuite {
     }
   }
 
-  test("benchUnits concatenation is benchOrder, units are family-atomic") {
-    val selected = SparkEntry.queries.keySet
-    val units = SessionMemos.benchUnits(selected)
-    assert(units.flatten === SessionMemos.benchOrder(selected))
-    // a family's consumers appear inside exactly one unit
-    SessionMemos.families.foreach { fam =>
-      val holding = units.filter(_.exists(fam.consumers.contains))
-      assert(holding.size === 1, s"family '${fam.name}' spans ${holding.size} units")
-      assert(fam.consumers.intersect(selected).subsetOf(holding.head.toSet))
-    }
-  }
-
   test("benchOrder is a permutation with contiguous family blocks") {
     val selected = SparkEntry.queries.keySet
     val order = SessionMemos.benchOrder(selected)

@@ -518,33 +518,6 @@ class DedupSimilaritySpec extends SparkSpec {
     assert("Exchange (hash|range)partitioning".r.findAllIn(plan).size <= 1, plan)
   }
 
-  test("prefixJoinPairs is COMPLETE and exact vs a brute-force pairwise scan") {
-    import spark.implicits._
-    // 40 docs in 4 template families with per-doc unique suffixes, plus
-    // singletons — the shape where the prefix filter must not lose pairs
-    val fixture = (0 until 40).map { i =>
-      val fam = i % 4
-      val base = (0 until 20).map(k => s"w${fam}_$k").mkString(" ")
-      // every 3rd doc mutates two tokens: drops the pair below/near τ
-      val extra = if (i % 3 == 0) s" uniq_$i other_$i" else s" uniq_$i"
-      (i.toLong, base + extra)
-    } ++ Seq((100L, "alone completely different words here"))
-    val got = Dedup.prefixJoinPairs(fixture.toDF("doc_id", "text"))
-      .as[(Long, Long, Long, Long, Long, Long)].collect().toSet
-    // brute force over the same word sets
-    val sets = fixture.map { case (id, t) => id -> t.split(" ").toSet }.toMap
-    val expect = (for {
-      a <- sets.keys; b <- sets.keys if a < b
-      inter = (sets(a) & sets(b)).size
-      if 9L * inter >= 4L * (sets(a).size + sets(b).size)
-    } yield (a, b, inter.toLong, sets(a).size.toLong, sets(b).size.toLong,
-      inter.toLong * 1000000L / (sets(a).size + sets(b).size - inter))).toSet
-    assert(got === expect)
-    assert(got.nonEmpty, "fixture must produce qualifying pairs")
-    assert(got.size < 40 * 39 / 2, "threshold must actually filter")
-    graft.Scratch.release(spark)
-  }
-
   test("dedup_semantic: keep rule, live verdict, and cluster invariants") {
     val out = Similarity.dedupSemantic.run(spark, dir)
       .select($"vec_id", $"cid", $"csim", $"n_near", $"kept")
