@@ -1,5 +1,7 @@
 package graft.f1
 
+import java.nio.file.{Files, Paths}
+
 import graft.SparkSpec
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
@@ -23,6 +25,11 @@ import org.apache.spark.sql.functions._
   *     season universe, with their own invariants (one row per win, the
   *     2023+ filter, parseable lap-time strings).
   *
+  * Every test reads golden rows, and no file in this repo holds them: the
+  * parquet files exist only where the reference is checked out, in its
+  * `Martin files/index` directory (`goldenDir`). Without that directory each
+  * test cancels (naming the missing path) rather than fails.
+  *
   * Complements GoldenSchemaSpec (schema parity) and F1DifferentialSpec
   * (semantic parity on synthesized seasons).
   */
@@ -32,8 +39,10 @@ class GoldenConsistencySpec extends SparkSpec {
 
   private val goldenDir = "/root/reference/Martin files/index"
 
-  private def golden(name: String): DataFrame =
+  private def golden(name: String): DataFrame = {
+    assume(Files.isDirectory(Paths.get(goldenDir)), s"golden parquet not present: $goldenDir")
     spark.read.parquet(s"$goldenDir/$name.parquet")
+  }
 
   private def rows(df: DataFrame): Seq[Seq[Any]] =
     df.collect().toSeq.map(_.toSeq).sortBy(_.mkString("\u0000"))

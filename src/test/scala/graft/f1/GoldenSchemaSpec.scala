@@ -1,20 +1,47 @@
 package graft.f1
 
+import java.nio.file.{Files, Paths}
+
 import graft.SparkSpec
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.types.StructType
 
 /** Schema parity against the reference's committed golden outputs
-  * (the parquet files under `/root/reference/Martin files/index`, Spark
-  * 3.5.1 metadata — SURVEY.md §1.1e). The reference repo ships no raw inputs, so row-level
-  * parity is checked semantically in F1PipelineSpec; here every usage-query
-  * output must carry the EXACT golden column names (including the
-  * `ConstructorName` casing quirk), order, and types — a user switching
-  * engines must get byte-compatible schemas downstream (their ES indexers
-  * key on these names).
+  * (SURVEY.md §1.1e). Every usage-query output must carry the EXACT golden
+  * column names (including the `ConstructorName` casing quirk), order, and
+  * types — a user switching engines must get byte-compatible schemas
+  * downstream (their ES indexers key on these names).
+  *
+  * The expected schemas come from two places:
+  *   - the committed resource `golden_schemas.ddl`, one `name<TAB>DDL` line
+  *     per output, copied from the golden-output tables of SURVEY.md §1.1e
+  *     and FIXTURES.md §A7 (i64 → BIGINT, str → STRING, f64 → DOUBLE). It
+  *     covers six outputs: wins, fastestlap, filter, weather2324, evopoints
+  *     and pitstop. These six tests run on every checkout.
+  *   - the golden parquet files themselves (Spark 3.5.1 metadata), in the
+  *     reference checkout's `Martin files/index` directory (`goldenDir`),
+  *     where it exists. The six tests above then also compare against the
+  *     parquet schema. The constructor test needs the parquet:
+  *     both documents give its schema only as "+ ConstructorName str", which
+  *     leaves the column's position open. Without the reference it cancels.
   */
 class GoldenSchemaSpec extends SparkSpec {
 
   private val goldenDir = "/root/reference/Martin files/index"
+
+  private def goldenPresent: Boolean = Files.isDirectory(Paths.get(goldenDir))
+
+  /** The documented golden schemas by output name, from the test resource
+    * `golden_schemas.ddl` (`name<TAB>DDL` lines).
+    */
+  private lazy val documented: Map[String, StructType] = {
+    val src = scala.io.Source.fromResource("golden_schemas.ddl", getClass.getClassLoader)
+    try src.getLines().filter(_.nonEmpty).map { line =>
+      val Array(name, ddl) = line.split("\t", 2)
+      name -> StructType.fromDDL(ddl)
+    }.toMap
+    finally src.close()
+  }
 
   import spark.implicits._
 
@@ -36,15 +63,23 @@ class GoldenSchemaSpec extends SparkSpec {
         lit(0.0).as("prcp"), lit(14.8).as("wspd"))
   }
 
-  private def assertSchemaMatches(golden: String, df: DataFrame): Unit = {
-    val exp = spark.read.parquet(s"$goldenDir/$golden.parquet").schema
-    val got = df.schema
+  private def assertSameSchema(golden: String, exp: StructType, got: StructType): Unit = {
     assert(got.fieldNames.toSeq === exp.fieldNames.toSeq,
       s"$golden: column names/order diverge from the golden output")
     exp.fields.zip(got.fields).foreach { case (e, g) =>
       assert(g.dataType === e.dataType,
         s"$golden.${e.name}: got ${g.dataType}, golden has ${e.dataType}")
     }
+  }
+
+  private def assertParquetSchemaMatches(golden: String, df: DataFrame): Unit =
+    assertSameSchema(golden,
+      spark.read.parquet(s"$goldenDir/$golden.parquet").schema, df.schema)
+
+  /** Checks the documented schema, then the golden parquet where present. */
+  private def assertSchemaMatches(golden: String, df: DataFrame): Unit = {
+    assertSameSchema(golden, documented(golden), df.schema)
+    if (goldenPresent) assertParquetSchemaMatches(golden, df)
   }
 
   test("wins matches the golden schema") {
@@ -68,7 +103,8 @@ class GoldenSchemaSpec extends SparkSpec {
   }
 
   test("constructor matches the golden schema (ConstructorName casing)") {
-    assertSchemaMatches("constructor", F1Analytics.evoPointsConstructor(combined))
+    assume(goldenPresent, s"golden parquet not present: $goldenDir")
+    assertParquetSchemaMatches("constructor", F1Analytics.evoPointsConstructor(combined))
   }
 
   test("pitstop matches the golden schema") {
