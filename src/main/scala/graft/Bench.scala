@@ -5,7 +5,8 @@ package graft
   * fixture builds (reported off-clock in their own fields). Scaled runs
   * (`GRAFT_BENCH_SCALE`) take the same path over the replicated corpus.
   * Prints the two stdout contract lines and writes the per-query sidecar
-  * (`bench_last.json` plus an append-only copy under `bench/`).
+  * (`bench_last.json` plus an append-only copy under `bench/`), which
+  * also holds each pass's generated-class compile count.
   */
 object Bench {
 
@@ -73,18 +74,21 @@ object Bench {
   // per-query regressions that were pure host contention (r14:
   // text_bigram_lm 5.97 s contended vs 0.45 s quiet, same code). The
   // harness defends itself instead of relying on judge-side adjudication:
-  // if the 1-min load exceeds GRAFT_BENCH_LOAD_MAX (default 3.0) it backs
-  // off up to GRAFT_BENCH_LOAD_WAITS × 20 s for the host to quiet down,
-  // and if still loud it STAMPS the record `"contended": true` — a
-  // flagged artifact can never again present noise as a code regression.
-  // load1_end is NOT gated: the bench's own 32-thread work keeps it
+  // if the 1-min load exceeds GRAFT_BENCH_LOAD_MAX it backs off up to
+  // GRAFT_BENCH_LOAD_WAITS × 20 s for the host to quiet down, and if
+  // still loud it STAMPS the record `"contended": true` — a flagged
+  // artifact can never again present noise as a code regression.
+  // The default threshold is the host's core count: above it, runnable
+  // threads outnumber cores. A fixed 3.0 made a 4-core host wait 20 s
+  // in 4 of 6 back-to-back runs: the previous run's own load decays
+  // through 3–4 for a minute. load1_end is NOT gated: the bench's own work keeps it
   // elevated by design.
   private def loadGate(): (Double, Double, Boolean, Int) = {
     val loadMax = sys.env.get("GRAFT_BENCH_LOAD_MAX").map { raw =>
       val v = raw.toDoubleOption.getOrElse(throw new IllegalArgumentException(
         s"GRAFT_BENCH_LOAD_MAX must be a number, got '$raw'"))
       require(v > 0, s"GRAFT_BENCH_LOAD_MAX must be positive, got $v"); v
-    }.getOrElse(3.0)
+    }.getOrElse(Runtime.getRuntime.availableProcessors.toDouble)
     val maxWaits = Knobs.envInt("GRAFT_BENCH_LOAD_WAITS", 6, 0, 60)
     var (load1Start, load5Start) = loadAvg()
     var waits = 0
@@ -150,7 +154,6 @@ object Bench {
   }
 
   def main(args: Array[String]): Unit = {
-    val selected = selectedNames()
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val (load1Start, load5Start, contended, waits) = loadGate()
     val scale = scaleFactor()
@@ -166,6 +169,9 @@ object Bench {
       case None => sfDir
     }
     val spark = GraftSession.build("graft-bench", Some(effDir))
+    // only now: building the registry initializes LshPlanes and freezes
+    // its geometry, so the session must record the corpus hint first
+    val selected = selectedNames()
     // Force FULL evaluation of the declared result — every column, every
     // row, including the presentation sort. A bare `.count()` lets the
     // optimizer prune exactly the work being benchmarked: column pruning
@@ -328,13 +334,22 @@ object Bench {
     // evidence described at cpuJiffies; -1 when /proc/stat is unreadable
     // or the window saw no jiffies at all
     val stealPct = scala.collection.mutable.LinkedHashMap.empty[String, Double]
+    // generated classes compiled during each pass — a warm second pass
+    // that compiles either recompiles what the codegen cache evicted
+    // (GraftSession.CodegenCacheEntries) or plans code that differs from
+    // the first pass's; -1 for a pass not run
+    val compiles = scala.collection.mutable.LinkedHashMap.empty[String, (Long, Long)]
     val (runSteal0, runTotal0) = cpuJiffies()
     val passes = ordered.map { name =>
       val (s0, t0) = cpuJiffies()
+      val c0 = GraftSession.codegenCompiles()
       val p1 = timedPass(name)
+      val c1 = GraftSession.codegenCompiles()
       // don't pay for a second pass of a failing query — the failure is
       // the result
       val p2 = if (p1 < 0) -1.0 else timedPass(name)
+      val c2 = GraftSession.codegenCompiles()
+      compiles(name) = (c1 - c0, if (p1 < 0) -1L else c2 - c1)
       val (s1, t1) = cpuJiffies()
       stealPct(name) =
         if (s0 < 0 || s1 < 0 || t1 <= t0) -1.0
@@ -362,7 +377,7 @@ object Bench {
     val runStealPct =
       if (runSteal0 < 0 || runSteal1 < 0 || runTotal1 <= runTotal0) -1.0
       else 100.0 * (runSteal1 - runSteal0).toDouble / (runTotal1 - runTotal0)
-    emit(results, passes.toMap, storageAfter, stealPct, fixtures,
+    emit(results, passes.toMap, storageAfter, stealPct, compiles, fixtures,
       sfJson(sfDir, scale), totalP1,
       load1Start, load5Start, load1End, load5End, runStealPct,
       contended, waits)
@@ -380,6 +395,7 @@ object Bench {
       passes: Map[String, (Double, Double)],
       storageAfter: collection.Map[String, Double],
       stealPct: collection.Map[String, Double],
+      compiles: collection.Map[String, (Long, Long)],
       fixtures: collection.Map[String, Double],
       sf: String, totalP1: Double,
       load1Start: Double, load5Start: Double, load1End: Double,
@@ -423,12 +439,15 @@ object Bench {
         storageAfter.getOrElse(k, -1.0)))
       val stealJson = perQuery(k => "%.2f".formatLocal(java.util.Locale.ROOT,
         stealPct.getOrElse(k, -1.0)))
+      val compilesJson = perQuery { k =>
+        val (c1, c2) = compiles.getOrElse(k, (-1L, -1L)); s"[$c1,$c2]"
+      }
       val fixtureRaw = FixtureFields
         .map(f => s"\"$f\":${fixtures.getOrElse(f, 0.0)}").mkString(",")
       val sidecar =
         s"""{"total_s":$total,"n":${results.size},"failed":$failedCount,"sf":$sf,"timing":"best_of_2","total_p1_s":$totalP1,$loadFields,""" +
           s"""$fixtureRaw,""" +
-          s""""queries":$qs,"passes":$raw,"storage_after_mb":$storageJson,"steal_pct":$stealJson}"""
+          s""""queries":$qs,"passes":$raw,"storage_after_mb":$storageJson,"steal_pct":$stealJson,"codegen_compiles":$compilesJson}"""
       java.nio.file.Files.write(
         java.nio.file.Paths.get("bench_last.json"),
         sidecar.getBytes(java.nio.charset.StandardCharsets.UTF_8))

@@ -9,6 +9,31 @@ import org.apache.spark.sql.SparkSession
   */
 object GraftSession {
 
+  /** Entries of Spark's generated-class cache
+    * (`spark.sql.codegen.cache.maxEntries`, Spark's default 100). The
+    * engine's working set is 2–35× that: one f1_dag pass needs about 190
+    * distinct generated classes, one full-surface pass at sf0.001 3438.
+    * An LRU cache cycled over a larger working set misses on nearly every
+    * lookup, so at 100 every warm pass recompiled almost everything
+    * ([[codegenCompiles]] per warm pass on 4 vCPUs: f1_dag 185,
+    * query_mix's nine queries 298, the full surface 5226). At 5000 the
+    * same passes compile 0–6, 6–16 and 662 classes; what still compiles
+    * is generated code that differs from run to run: at 8192 the full
+    * surface still compiles 620. The full-surface warm pass fell from
+    * 94 s to 61 s; metaspace after two passes read 240 MB (246 MB at
+    * 100). Sizing rule: at least 1.25× the distinct classes of one
+    * full-surface pass. A static conf: `CodeGenerator` sizes its cache
+    * once, at first use, so it is set on the builder, never at runtime.
+    */
+  val CodegenCacheEntries: Int = 5000
+
+  /** Generated classes compiled in this JVM so far: one per miss of the
+    * cache above.
+    */
+  def codegenCompiles(): Long =
+    org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME
+      .getCount
+
   /** Derive the shuffle-partition upper bound from the input's on-disk
     * size: ceil(bytes / target), floored at the core count. The target
     * (GRAFT_TARGET_PARTITION_MB, default 6 MiB of compressed parquet ≈
@@ -83,6 +108,8 @@ object GraftSession {
       // default heap; default interval is 30 min). Two minutes keeps the
       // reclaim cadence well under the accretion rate at any heap size.
       .config("spark.cleaner.periodicGC.interval", "2min")
+      .config("spark.sql.codegen.cache.maxEntries",
+        CodegenCacheEntries.toLong)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // Record the embeddings corpus size for LSH geometry auto-sizing

@@ -82,12 +82,23 @@ final class BulkSinkTable(schema: StructType) extends Table with SupportsWrite {
     }
 }
 
-private object Metrics {
-  final class Sum(override val name: String, override val description: String)
-      extends CustomSumMetric
-  final case class Task(name: String, value: Long) extends CustomTaskMetric
-  val names = Seq("docs", "batches", "retries", "failedBatches", "failedDocs")
+/** The sink's five counters as DSv2 sum metrics. When Spark aggregates a
+  * custom metric it re-creates it from its class name through a
+  * zero-argument constructor, so each counter is its own public class.
+  */
+sealed abstract class BulkSinkMetric(metricName: String)
+    extends CustomSumMetric {
+  override def name(): String = metricName
+  override def description(): String = s"bulk sink $metricName"
 }
+final class BulkDocsMetric extends BulkSinkMetric("docs")
+final class BulkBatchesMetric extends BulkSinkMetric("batches")
+final class BulkRetriesMetric extends BulkSinkMetric("retries")
+final class BulkFailedBatchesMetric extends BulkSinkMetric("failedBatches")
+final class BulkFailedDocsMetric extends BulkSinkMetric("failedDocs")
+
+private final case class BulkTaskMetric(name: String, value: Long)
+    extends CustomTaskMetric
 
 final class BulkWrite(schema: StructType, options: CaseInsensitiveStringMap)
     extends Write with BatchWrite {
@@ -101,8 +112,8 @@ final class BulkWrite(schema: StructType, options: CaseInsensitiveStringMap)
   require(maxAttempts > 0, s"maxAttempts must be positive, got $maxAttempts")
 
   override def supportedCustomMetrics(): Array[CustomMetric] =
-    Metrics.names.map(n => new Metrics.Sum(n, s"bulk sink $n"): CustomMetric)
-      .toArray
+    Array(new BulkDocsMetric, new BulkBatchesMetric, new BulkRetriesMetric,
+      new BulkFailedBatchesMetric, new BulkFailedDocsMetric)
 
   override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory =
     new BulkWriterFactory(schema, batchSize, maxAttempts,
@@ -210,11 +221,19 @@ final class BulkWriter(schema: StructType, batchSize: Int, maxAttempts: Int,
     if (buf.size >= batchSize) flush()
   }
 
+  // Spark hands a task its whole partition here and reads the task's
+  // metrics before commit(): post the last partial bulk now, so the
+  // metrics count it
+  override def writeAll(rows: java.util.Iterator[InternalRow]): Unit = {
+    while (rows.hasNext) write(rows.next())
+    flush()
+  }
+
   override def currentMetricsValues(): Array[CustomTaskMetric] =
-    Array(Metrics.Task("docs", docs), Metrics.Task("batches", batches),
-      Metrics.Task("retries", retries),
-      Metrics.Task("failedBatches", failedBatches),
-      Metrics.Task("failedDocs", failedDocs))
+    Array(BulkTaskMetric("docs", docs), BulkTaskMetric("batches", batches),
+      BulkTaskMetric("retries", retries),
+      BulkTaskMetric("failedBatches", failedBatches),
+      BulkTaskMetric("failedDocs", failedDocs))
 
   override def commit(): WriterCommitMessage = {
     flush()

@@ -4,7 +4,18 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared local session for specs — same config surface as Verify/Bench. */
+/** Shared local session for specs. It shares with Verify/Bench
+  * ([[GraftSession.build]]) the time zone, the extensions, nanosAsLong and
+  * the codegen cache size. It does NOT share three settings:
+  *   - `spark.sql.join.preferSortMergeJoin` stays at Spark's default
+  *     (true), where the engine sets false; BucketedJoinSpec asserts
+  *     `SortMergeJoinExec`;
+  *   - `spark.cleaner.periodicGC.interval` stays at Spark's default;
+  *   - shuffle partitions are a fixed 4 on `local[4]`, not derived from
+  *     the input size.
+  * It also records no LSH corpus hint, so specs plan ann queries with the
+  * default LSH geometry.
+  */
 trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   lazy val spark: SparkSession = SparkSpec.session
@@ -20,8 +31,12 @@ object SparkSpec {
     .config("spark.sql.shuffle.partitions", "4")
     .config("spark.sql.session.timeZone", "UTC")
     .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.plans.GraftSparkExtensions")
+    .config("spark.sql.extensions", "graft.plans.GraftSparkExtensions")
     .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+    // static conf: the suite's working set of generated classes is far
+    // above Spark's default of 100 (GraftSession.CodegenCacheEntries)
+    .config("spark.sql.codegen.cache.maxEntries",
+      GraftSession.CodegenCacheEntries.toLong)
     // static conf: bucketed-table specs write managed tables here
     .config("spark.sql.warehouse.dir",
       java.nio.file.Files.createTempDirectory("graft-warehouse").toString)

@@ -1,12 +1,15 @@
 package graft.sources
 
-import java.util.concurrent.ConcurrentLinkedQueue
+import java.util.concurrent.{ConcurrentLinkedQueue, LinkedBlockingQueue, TimeUnit}
+
+import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+import org.apache.spark.sql.util.QueryExecutionListener
 
 import graft.SparkSpec
 import graft.sources.bulksink.{BulkSink, BulkTransports}
 
-/** DSv2 bulk write path: JSON serialization, batching, retry, quarantine
-  * and the committed job-level report.
+/** DSv2 bulk write path: JSON serialization, batching, retry, quarantine,
+  * the committed job-level report and the per-write SQL metrics.
   */
 class BulkSinkSpec extends SparkSpec {
 
@@ -56,6 +59,42 @@ class BulkSinkSpec extends SparkSpec {
     assert(r.failedBatches === 1L && r.failedDocs === 1L, s"poison quarantined: $r")
     assert(r.retries >= 2L, s"transient failures retried: $r")
     assert(delivered.size === 2)
+  }
+
+  test("the sink's counters reach the write's SQL metrics") {
+    BulkTransports.register("metered") { _ => () }
+    val plans = new LinkedBlockingQueue[SparkPlan]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution,
+          durationNs: Long): Unit = plans.add(qe.executedPlan)
+      override def onFailure(funcName: String, qe: QueryExecution,
+          exception: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    val docs = try {
+      (1L to 7L).toDF("id").repartition(2)
+        .write.format(Fmt)
+        .option("transport.id", "metered").option("batchSize", "3")
+        .mode("append").save()
+      Iterator.continually(plans.poll(30, TimeUnit.SECONDS))
+        .takeWhile(_ != null)
+        .flatMap(_.collectFirst {
+          case p if p.metrics.contains("docs") => p.metrics("docs")
+        })
+        .nextOption()
+    } finally spark.listenerManager.unregister(listener)
+    assert(docs.isDefined, "the write's executed plan declares a docs metric")
+    // the value the SQL status store aggregates from the task updates — it
+    // re-creates the metric from its class name to do so
+    val store = spark.sharedState.statusStore
+    val deadline = System.nanoTime() + TimeUnit.SECONDS.toNanos(30)
+    def aggregated: Option[String] = store.executionsList()
+      .find(_.metrics.exists(_.accumulatorId == docs.get.id))
+      .flatMap(e => store.executionMetrics(e.executionId).get(docs.get.id))
+    // task-end events reach the store asynchronously: wait for the total
+    while (!aggregated.contains("7") && System.nanoTime() < deadline)
+      Thread.sleep(50)
+    assert(aggregated === Some("7"), "docs SQL metric equals the rows written")
   }
 
   test("unsupported column types fail loudly, not as mangled documents") {
