@@ -6,7 +6,7 @@ package graft
   * (`GRAFT_BENCH_SCALE`) take the same path over the replicated corpus.
   * Prints the two stdout contract lines and writes the per-query sidecar
   * (`bench_last.json` plus an append-only copy under `bench/`), which
-  * also holds each pass's generated-class compile count.
+  * also holds each query's [[Ledger]] record.
   */
 object Bench {
 
@@ -26,30 +26,6 @@ object Bench {
       (java.lang.management.ManagementFactory.getOperatingSystemMXBean
         .getSystemLoadAverage, -1.0)
     }
-  }
-
-  // Steal brackets: the host's documented 1.0-1.8× performance phases
-  // (NOTES.md host-band rule) are co-tenant CPU steal INVISIBLE to our
-  // own loadavg — three rounds burned an adjudication cycle each on
-  // "regressions" that were purely this band (r16: graph_triangles_big
-  // 17.5 s in the driver run vs 2.1 s focused, same code and bytes).
-  // The probe-pair rule works but is manual and after-the-fact; this
-  // snapshot makes every per-query reading carry its own phase
-  // evidence: /proc/stat's aggregate cpu line, fields (steal, Σuser..steal)
-  // in jiffies, sampled before and after each query's two passes. The
-  // sidecar records Δsteal/Δtotal per query — ≳2-5% sustained steal IS
-  // the slow band; ~0% proves a quiet window. (-1, -1) on non-Linux.
-  // total = first 8 fields (user..steal) ONLY: the kernel already folds
-  // guest/guest_nice into user/nice, so summing all 10 double-counts
-  // guest jiffies and understates steal% (r17 advice).
-  private def cpuJiffies(): (Long, Long) = {
-    try {
-      val fields = new String(java.nio.file.Files.readAllBytes(
-        java.nio.file.Paths.get("/proc/stat")),
-        java.nio.charset.StandardCharsets.UTF_8)
-        .linesIterator.next().trim.split("\\s+").drop(1).map(_.toLong)
-      (fields(7), fields.take(8).sum)
-    } catch { case _: Throwable => (-1L, -1L) }
   }
 
   // millisecond precision in the stdout map: at 131 queries the
@@ -180,9 +156,11 @@ object Bench {
     // count-over-left-join can skip the join entirely — band_join "ran"
     // in 0.2 s at ×100 while its real cost is the 10⁸-pair band join.
     // toRdd materializes the final InternalRows without collecting them.
-    def exec(name: String): Unit =
-      SparkEntry.queries(name)(spark, effDir).queryExecution.toRdd
-        .foreach(_ => ())
+    def exec(name: String): org.apache.spark.sql.execution.QueryExecution = {
+      val qe = SparkEntry.queries(name)(spark, effDir).queryExecution
+      qe.toRdd.foreach(_ => ())
+      qe
+    }
     // Warm the JVM once (codegen compiler, parquet reader, shuffle, join
     // machinery) so the first timed query doesn't absorb session startup.
     // Warm against the bench's OWN data dir — a hardcoded path could be
@@ -302,18 +280,17 @@ object Bench {
     // contention, not plans. The min of two passes is robust to a
     // one-off stall while still honest about the plan's real cost; both
     // raw passes are preserved in the sidecar for drift forensics.
-    def timedPass(name: String): Double = {
-      val t0 = System.nanoTime()
-      // a failed query must be VISIBLE as -1, not recorded as a plausible
-      // small time-to-failure
-      val ok = try { exec(name); true } catch {
-        case e: Throwable => System.err.println(s"[bench] $name failed: $e"); false
+    // Each pass is one ledger record; its wall time is the pass time.
+    val ledger = new Ledger(spark)
+    def timedPass(name: String): Ledger.Record = {
+      val r = ledger.measure(name) {
+        // scratch persists are per-query reuse, not cross-query state —
+        // release inside the timed window costs ~nothing (non-blocking)
+        // and keeps 100+ queries from accreting storage blocks
+        try Some(exec(name)) finally Scratch.release(spark)
       }
-      // scratch persists are per-query reuse, not cross-query state —
-      // release inside the timed window costs ~nothing (non-blocking)
-      // and keeps 100+ queries from accreting storage blocks
-      Scratch.release(spark)
-      if (ok) (System.nanoTime() - t0) / 1e9 else -1.0
+      r.error.foreach(e => System.err.println(s"[bench] $name failed: $e"))
+      r
     }
     // DETERMINISTIC execution order (SessionMemos.benchOrder):
     // alphabetical with each memo family's consumers clustered into one
@@ -323,46 +300,29 @@ object Bench {
     // until teardown, which is what the measured in-run vs focused ×100
     // gap (dq_audit 19.3 vs 15.1 s) was made of.
     val ordered = SessionMemos.benchOrder(selected)
-    // Per-query storage snapshot (persisted blocks: session memos,
-    // scratch persists that escaped release) taken after each query's
-    // passes — the instrument for the in-run vs focused ×100 gap: late
-    // entries that run slower in-run than focused do so under whatever
-    // this column says was resident. Sidecar-only (the stdout map is
-    // size-bounded).
-    val storageAfter = scala.collection.mutable.LinkedHashMap.empty[String, Double]
-    // per-query steal fraction (percent) across both passes — the phase
-    // evidence described at cpuJiffies; -1 when /proc/stat is unreadable
-    // or the window saw no jiffies at all
-    val stealPct = scala.collection.mutable.LinkedHashMap.empty[String, Double]
-    // generated classes compiled during each pass — a warm second pass
-    // that compiles either recompiles what the codegen cache evicted
-    // (GraftSession.CodegenCacheEntries) or plans code that differs from
-    // the first pass's; -1 for a pass not run
-    val compiles = scala.collection.mutable.LinkedHashMap.empty[String, (Long, Long)]
-    val (runSteal0, runTotal0) = cpuJiffies()
+    // A record's storage_after_mb is the storage resident after its pass
+    // (session memos, scratch persists that escaped release): late
+    // entries that run slower in-run than focused do so under it.
+    val (runSteal0, runTotal0) = Ledger.cpuJiffies()
     val passes = ordered.map { name =>
-      val (s0, t0) = cpuJiffies()
-      val c0 = GraftSession.codegenCompiles()
-      val p1 = timedPass(name)
-      val c1 = GraftSession.codegenCompiles()
+      val r1 = timedPass(name)
       // don't pay for a second pass of a failing query — the failure is
       // the result
-      val p2 = if (p1 < 0) -1.0 else timedPass(name)
-      val c2 = GraftSession.codegenCompiles()
-      compiles(name) = (c1 - c0, if (p1 < 0) -1L else c2 - c1)
-      val (s1, t1) = cpuJiffies()
-      stealPct(name) =
-        if (s0 < 0 || s1 < 0 || t1 <= t0) -1.0
-        else 100.0 * (s1 - s0).toDouble / (t1 - t0).toDouble
-      storageAfter(name) = spark.sparkContext.getRDDStorageInfo
-        .map(i => (i.memSize + i.diskSize).toDouble).sum / 1e6
+      val r2 = if (r1.error.isDefined) None else Some(timedPass(name))
       // bounded-storage policy: a memo family whose LAST registered
       // consumer just finished is released now (SessionMemos scaladoc) —
-      // the snapshot above records residency as the query saw it
+      // the record above holds residency as the query saw it
       SessionMemos.releaseAfter(spark, name, selected)
-      name -> (p1, p2)
+      name -> (r1, r2)
     }
-    val results = passes.map { case (name, (p1, p2)) =>
+    ledger.close()
+    // a failed query must be VISIBLE as -1, not recorded as a plausible
+    // small time-to-failure
+    def passTime(r: Ledger.Record): Double = if (r.error.isEmpty) r.wallS else -1.0
+    val times = passes.map { case (name, (r1, r2)) =>
+      name -> (passTime(r1), r2.map(passTime).getOrElse(-1.0))
+    }
+    val results = times.map { case (name, (p1, p2)) =>
       name -> (if (p1 < 0 || p2 < 0) -1.0 else math.min(p1, p2))
     }
     // first-pass sum, reported beside the min-of-2 total: session memos
@@ -371,13 +331,13 @@ object Bench {
     // the first pass is where the memo build (and the JVM's per-plan
     // codegen) actually lands. Publishing Σp1 keeps the cold-including
     // bound visible instead of laundering it through the min.
-    val totalP1 = passes.map(_._2._1).filter(_ >= 0).sum
+    val totalP1 = times.map(_._2._1).filter(_ >= 0).sum
     val (load1End, load5End) = loadAvg()
-    val (runSteal1, runTotal1) = cpuJiffies()
+    val (runSteal1, runTotal1) = Ledger.cpuJiffies()
     val runStealPct =
       if (runSteal0 < 0 || runSteal1 < 0 || runTotal1 <= runTotal0) -1.0
       else 100.0 * (runSteal1 - runSteal0).toDouble / (runTotal1 - runTotal0)
-    emit(results, passes.toMap, storageAfter, stealPct, compiles, fixtures,
+    emit(results, times.toMap, passes.toMap, fixtures,
       sfJson(sfDir, scale), totalP1,
       load1Start, load5Start, load1End, load5End, runStealPct,
       contended, waits)
@@ -393,9 +353,7 @@ object Bench {
   /** Print the two stdout contract lines and write the sidecar files. */
   private def emit(results: Seq[(String, Double)],
       passes: Map[String, (Double, Double)],
-      storageAfter: collection.Map[String, Double],
-      stealPct: collection.Map[String, Double],
-      compiles: collection.Map[String, (Long, Long)],
+      records: Map[String, (Ledger.Record, Option[Ledger.Record])],
       fixtures: collection.Map[String, Double],
       sf: String, totalP1: Double,
       load1Start: Double, load5Start: Double, load1End: Double,
@@ -435,19 +393,37 @@ object Bench {
     // result (min + both raw passes) there as the durable record.
     try {
       val raw = perQuery { k => val (p1, p2) = passes(k); s"[$p1,$p2]" }
-      val storageJson = perQuery(k => "%.1f".formatLocal(java.util.Locale.ROOT,
-        storageAfter.getOrElse(k, -1.0)))
-      val stealJson = perQuery(k => "%.2f".formatLocal(java.util.Locale.ROOT,
-        stealPct.getOrElse(k, -1.0)))
-      val compilesJson = perQuery { k =>
-        val (c1, c2) = compiles.getOrElse(k, (-1L, -1L)); s"[$c1,$c2]"
+      // the published record: the second pass's, the first's when the
+      // second did not run
+      def record(k: String): Ledger.Record = {
+        val (r1, r2) = records(k); r2.getOrElse(r1)
       }
+      val storageJson = perQuery(k => "%.1f".formatLocal(java.util.Locale.ROOT,
+        record(k).storageAfterMb))
+      // steal over both passes: each pass's steal weighted by its wall
+      // time, which is proportional to the jiffies it spanned
+      val stealJson = perQuery { k =>
+        val rs = records(k)._1 +: records(k)._2.toSeq
+        val steal =
+          if (rs.exists(_.stealPct < 0)) -1.0
+          else rs.map(r => r.stealPct * r.wallS).sum / rs.map(_.wallS).sum
+        "%.2f".formatLocal(java.util.Locale.ROOT, steal)
+      }
+      // generated classes compiled during each pass: a warm second pass
+      // that compiles either recompiles what the codegen cache evicted
+      // (GraftSession.CodegenCacheEntries) or plans code that differs
+      // from the first pass's; -1 for a pass not run
+      val compilesJson = perQuery { k =>
+        val (r1, r2) = records(k)
+        s"[${r1.compiles},${r2.map(_.compiles).getOrElse(-1L)}]"
+      }
+      val ledgerJson = perQuery(k => record(k).toJson)
       val fixtureRaw = FixtureFields
         .map(f => s"\"$f\":${fixtures.getOrElse(f, 0.0)}").mkString(",")
       val sidecar =
         s"""{"total_s":$total,"n":${results.size},"failed":$failedCount,"sf":$sf,"timing":"best_of_2","total_p1_s":$totalP1,$loadFields,""" +
           s"""$fixtureRaw,""" +
-          s""""queries":$qs,"passes":$raw,"storage_after_mb":$storageJson,"steal_pct":$stealJson,"codegen_compiles":$compilesJson}"""
+          s""""queries":$qs,"passes":$raw,"storage_after_mb":$storageJson,"steal_pct":$stealJson,"codegen_compiles":$compilesJson,"ledger":$ledgerJson}"""
       java.nio.file.Files.write(
         java.nio.file.Paths.get("bench_last.json"),
         sidecar.getBytes(java.nio.charset.StandardCharsets.UTF_8))

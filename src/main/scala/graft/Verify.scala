@@ -17,9 +17,9 @@ import java.nio.file.{Files, Paths}
   * asserts bit-exact parity (exceptAll both ways) against the inline
   * parquet just dumped. Inline is DuckDB-gated directly; served is gated
   * transitively through the parity. Any divergence exits nonzero — the
-  * driver's artifact cannot silently bless one posture. Opt-out:
-  * GRAFT_VERIFY_BOTH=0 (iteration speed); GRAFT_VERIFY_FIXTURES=1 keeps
-  * its meaning (served-only dump, for tools/verify_fixtures.sh).
+  * driver's artifact cannot silently bless one posture. The optional
+  * name list narrows both passes; GRAFT_VERIFY_FIXTURES=1 keeps its
+  * meaning (served-only dump, for tools/verify_fixtures.sh).
   */
 object Verify {
 
@@ -34,7 +34,7 @@ object Verify {
       "dedup_semantic", "sample_prune_proto", "dedup_incr_index",
       "ann_index_persist")).distinct.sorted
 
-  private def obtainAll(spark: org.apache.spark.sql.SparkSession,
+  private[graft] def obtainAll(spark: org.apache.spark.sql.SparkSession,
       sfDir: String): Unit = {
     operators.Similarity.ivfPqIndexWrite(spark, sfDir)
     operators.Similarity.rankedTopKWrite(spark, sfDir)
@@ -47,7 +47,7 @@ object Verify {
     Scratch.release(spark)
   }
 
-  private def releaseMemos(spark: org.apache.spark.sql.SparkSession): Unit = {
+  private[graft] def releaseMemos(spark: org.apache.spark.sql.SparkSession): Unit = {
     operators.Dedup.releaseSession(spark)
     operators.Similarity.releaseSession(spark)
     operators.Graph.releaseSession(spark)
@@ -67,37 +67,33 @@ object Verify {
     // DuckDB hash gate (tools/verify_fixtures.sh's posture).
     val servedOnly = sys.env.get("GRAFT_VERIFY_FIXTURES").contains("1")
     if (servedOnly) obtainAll(spark, sfDir)
-    SparkEntry.queries
+    // one ledger record per dumped query, written to ledger.json; the
+    // write's plan comes from the session's plan listener
+    val ledger = new Ledger(spark)
+    val records = SparkEntry.queries.toSeq
       .filter { case (name, _) => only.forall(_.contains(name)) }
-      .foreach { case (name, fn) =>
-        try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-          .parquet(s"$outDir/$name")
-        catch { case e: Throwable =>
-          System.err.println(s"[verify] $name failed: ${e.getMessage}")
+      .map { case (name, fn) =>
+        val r = ledger.measure(name) {
+          fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+            .parquet(s"$outDir/$name")
+          None
         }
+        r.error.foreach(e => System.err.println(s"[verify] $name failed: $e"))
         // per-query scratch persists die with the query (Scratch scaladoc)
         Scratch.release(spark)
+        name -> r
       }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
+    ledger.close()
+    Files.writeString(Paths.get(s"$outDir/ledger.json"), records
+      .map { case (k, r) => s"${Ledger.str(k)}: ${r.toJson}" }
+      .mkString("{", ",\n", "}\n"))
     val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+      .map { case (k, v) => s"${Ledger.str(k)}: ${Ledger.str(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     // fixture-posture parity pass (scaladoc above): served result must be
     // bit-identical to the inline parquet the driver is about to gate
-    val both = !servedOnly && !sys.env.get("GRAFT_VERIFY_BOTH").contains("0")
     var parityFailed = false
-    if (both) {
+    if (!servedOnly) {
       // the inline pass left session memos resident — tear them down so
       // the re-run rebuilds THROUGH the store (peek hits), the posture
       // the benches run
@@ -123,7 +119,7 @@ object Verify {
         name -> status
       }
       Files.writeString(Paths.get(s"$outDir/fixture_parity.json"),
-        verdicts.map { case (k, v) => s"${q(k)}: ${q(v)}" }
+        verdicts.map { case (k, v) => s"${Ledger.str(k)}: ${Ledger.str(v)}" }
           .mkString("{", ",", "}"))
       System.err.println(
         s"[verify] fixture-posture parity: ${verdicts.count(_._2 == "match")}/${verdicts.size} match")

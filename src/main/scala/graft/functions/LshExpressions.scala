@@ -34,9 +34,8 @@ object LshPlanes {
   // ≤2k: 500 at sf0.01, 2k at sf0.1), and beyond that bits =
   // ⌈log2(n/15)⌉ (≈15-vector average buckets) with 8 tables: the ×10
   // smoke (20k vectors) derives 8×11, the ×100 smoke (200k) 8×14 — the
-  // same regime the ×100 run previously reached only via hand-set
-  // GRAFT_LSH_TABLES=8 GRAFT_LSH_BITS=16. The env knobs
-  // remain the explicit override. Every consumer — the native
+  // same regime the ×100 run previously reached only by hand-setting
+  // 8 tables × 16 bits. Every consumer — the native
   // expression, the Spark pipelines, AND the generated DuckDB oracle
   // SQL — derives from these constants at JVM init, so the correctness
   // gate stays self-consistent at ANY setting (recall/candidate-volume
@@ -77,10 +76,10 @@ object LshPlanes {
     System.err.println(s"[graft] LSH geometry auto-sized to $t tables x $b bits")
   }
 
-  // bits capped at 62 so the MSB-first bucket shifts (1L << bits-1) and
-  // the multi-probe flip masks stay inside a signed long
-  val NumTables: Int = envInt("GRAFT_LSH_TABLES", sized.map(_._1).getOrElse(16), 1, 64)
-  val TableBits: Int = envInt("GRAFT_LSH_BITS", sized.map(_._2).getOrElse(6), 1, 62)
+  // derivedGeometry caps bits at 24, well inside the 62 that keeps the
+  // MSB-first bucket shifts (1L << bits-1) and flip masks in a signed long
+  val NumTables: Int = sized.map(_._1).getOrElse(16)
+  val TableBits: Int = sized.map(_._2).getOrElse(6)
   val Dims = 64
 
   /** ±1 plane tensor flattened [t][b][i] — md5-derived: sign(t,b,i) is the

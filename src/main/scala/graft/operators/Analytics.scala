@@ -283,18 +283,6 @@ object Analytics {
     s.sql("SELECT o_orderkey, o_totalprice FROM graft_orders ORDER BY o_custkey, o_orderkey")
   }
 
-  /** The racetime 5-key presentation sort packed into ONE long (bit
-    * budget and isomorphism proof at the use site below). Shared with
-    * [[graft.Decomp]]'s stage pricing so a future multiplier change can
-    * never desynchronize the decomposition from the shipped query (r17
-    * advice).
-    */
-  val RacetimePackedSortKey: String =
-    "l_orderkey * 262144L + l_linenumber * 32768L + " +
-      "(CASE WHEN q60 < 10 THEN q60 ELSE q60 div 10 END) * 2048L + " +
-      "(CASE WHEN q60 < 10 THEN 10 ELSE q60 % 10 END) * 128L + " +
-      "l_partkey % 100"
-
   /** F1+F2 (racetime, F:33-63): parse + format race-time strings, both the
     * composed-builtin pipeline and the native RaceTimeSeconds expression
     * (`secs_native`), on strings constructed from testdata columns.
@@ -338,7 +326,7 @@ object Analytics {
       // ':' = 58 — so single-digit q ranks after q·10+0..9). Two rows tied
       // on ALL four keys have byte-identical output, so the order is total.
       .withColumn("q60", floor(col("l_quantity")).cast("int") % 60)
-      // the 5-key tuple packed into ONE long (round 17; Decomp priced the
+      // the 5-key tuple packed into ONE long (round 17; stage pricing put the
       // packed sort at −2.1 s of the ×100 sort stage and a 5×-narrower
       // exchange payload): every trailing field is bounded non-negative —
       // lineno 1..7 (<8), lexq1 0..9 and lexq2 0..10 (<16 each), pmod
@@ -347,14 +335,17 @@ object Analytics {
       // side t_str re-sort in RaceTimeSpec). okey rides the high bits:
       // ×262144 overflows long only past okey ≈ 3.5e13, three orders of
       // magnitude beyond the ×100 corpus' offset key domain.
-      .withColumn("sk", expr(RacetimePackedSortKey))
+      .withColumn("sk", expr("l_orderkey * 262144L + l_linenumber * 32768L + " +
+        "(CASE WHEN q60 < 10 THEN q60 ELSE q60 div 10 END) * 2048L + " +
+        "(CASE WHEN q60 < 10 THEN 10 ELSE q60 % 10 END) * 128L + " +
+        "l_partkey % 100"))
       .orderBy(col("sk"))
       .drop("q60", "sk")
       // floor, not bare cast: DuckDB's CAST(double AS INT) ROUNDS while
       // Spark's truncates — floor first so both engines agree even if
       // quantities were ever non-integral.
-      // Fused native t_str (round 17; the r16 concat/lpad chain priced by
-      // graft.Decomp at ×100: format stage 24.6 s of the 30.9 s query):
+      // Fused native t_str (round 17; the r16 concat/lpad chain priced at
+      // ×100: format stage 24.6 s of the 30.9 s query):
       // race_time_str builds '%d:%02d.%03d' in ONE codegen'd static call
       // — byte-identical to the concat/lpad form including its lpad
       // truncation and negative-field edges, pinned in RaceTimeSpec.

@@ -36,8 +36,7 @@ object DataQuality {
     Tables.load(s, dir, name)
 
   /** The lineitem dimension-FK + domain-rule scan: broadcast probes
-    * feeding one map-side conditional aggregate — zero exchanges. Named
-    * so [[graft.Decomp]] can price it as a stage of `dq_audit`. */
+    * feeding one map-side conditional aggregate — zero exchanges. */
   private[graft] def liDimChecks(s: SparkSession, dir: String): DataFrame = {
     val pkeys = t(s, dir, "part").select(col("p_partkey")).distinct()
     val skeys = t(s, dir, "supplier").select(col("s_suppkey")).distinct()
@@ -53,8 +52,7 @@ object DataQuality {
 
   /** The order-grain rollup carrying the orders-FK orphan count and the
     * composite-PK dup count (bitmask distinct — see the inline note in
-    * [[audit]]); the one fact exchange in the audit. Named for
-    * [[graft.Decomp]] stage pricing. */
+    * [[audit]]); the one fact exchange in the audit. */
   private[graft] def liKeyChecks(s: SparkSession, dir: String): DataFrame =
     liKeyChecksOn(
       t(s, dir, "lineitem").select(col("l_orderkey"), col("l_linenumber")),
@@ -73,7 +71,7 @@ object DataQuality {
     // aggregate that forces the ENTIRE rollup (all four functions, both
     // partial and final) through interpreted ObjectHashAggregate; at ×100
     // that non-codegen pass over 60M rows was the query's dominant stage
-    // (Decomp li_key_rollup 12.5 s of 18). The correction moved to the
+    // (li_key_rollup 12.5 s of 18). The correction moved to the
     // pruned branch below.
     val perOrderMain = li
       .groupBy(col("l_orderkey"))

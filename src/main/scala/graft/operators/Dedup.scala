@@ -1186,29 +1186,6 @@ object Dedup {
     bandFrame(sig).select(col("doc_id"), col("band"),
       expr("CAST(conv(substring(bkey, 1, 15), 16, 10) AS BIGINT)").as("bkey"))
 
-  /** [[graft.Decomp]] stage thunks for `dedup_incr_index` (round 18):
-    * the stored base index is obtained first (Bench's serve posture),
-    * then the stages price the delta-half signing pass, the stored-index
-    * scan, and the bucket arithmetic over the merged entries, against
-    * the registered query. */
-  private[graft] def incrDecompStages(s: SparkSession, dir: String)
-      : Seq[(String, () => DataFrame)] = {
-    baseIndexWrite(s, dir)
-    val root = graft.FixtureStore.peek("dedupbase", dir).get
-    val mid = s.read.parquet(s"$root/meta").collect()(0).getAs[Long]("mid")
-    Seq(
-      "delta_sign" -> (() =>
-        bandFrameLong(minhashSignatures(docs(s, dir)
-          .filter(col("doc_id") >= mid)))),
-      "base_scan" -> (() => s.read.parquet(s"$root/baseidx")),
-      "bucket_agg" -> (() => s.read.parquet(s"$root/baseidx")
-        .groupBy(col("band"), col("bkey")).agg(count(lit(1)).as("sz"))
-        .filter(col("sz") <= MaxBandBucket)
-        .groupBy(col("band"))
-        .agg(sum(expr("sz * (sz - 1L) div 2")).as("n_pairs"))),
-      "full" -> (() => incrIndex.run(s, dir)))
-  }
-
   val incrIndex: Q = Q("dedup_incr_index",
     s"""WITH $minhashBandsSql,
        |m AS (SELECT (min(doc_id) + max(doc_id)) // 2 AS mid FROM documents),

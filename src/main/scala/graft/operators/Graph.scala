@@ -772,9 +772,7 @@ object Graph {
 
   /** One BFS expansion round over the src-partitioned edge frame — shared
     * by [[bfsDistances]] (keyed = false: plain (node) frontier) and
-    * [[closeness]] (keyed = true: per-source (s, node) frontier), and by
-    * the `graft.Decomp graph_rounds` plan instrument, so the committed
-    * round-plan evidence is the loop's round by construction. Join
+    * [[closeness]] (keyed = true: per-source (s, node) frontier). Join
     * strategies are picked from the EXACT frontier/seen counts (guide
     * §3.1): broadcast under [[BfsBroadcastRows]], SHUFFLE_HASH above —
     * either way the persisted edge frame is never sorted and never
@@ -1036,59 +1034,6 @@ object Graph {
       .groupBy(col("y"))
       .agg(max(struct(col("c"), (-col("lbl")).as("nl"))).as("m"))
       .select(col("y").as("node"), (-col("m.nl")).as("lbl"))
-
-  /** One representative round of each iterative graph loop with its
-    * FORMATTED plan text — the `graft.Decomp graph_rounds` instrument.
-    * The loops materialize their rounds eagerly inside the query
-    * functions, so PLANS.md only ever records the final aggregation over
-    * the checkpointed result; committed round-plan claims (join strategy,
-    * no per-round sort of the persisted edge frames) are checkable
-    * against this output instead. Each round is built exactly as the
-    * registered query builds it ([[prRound]] / [[lpaRound]] /
-    * [[expandRound]] are the shared constructors).
-    */
-  def roundDecomp(s: SparkSession, dir: String): Seq[(String, String, DataFrame)] = {
-    def planOf(df: DataFrame): String = df.queryExecution
-      .explainString(org.apache.spark.sql.execution.FormattedMode)
-    val edges = bipartiteEdges(s, dir)
-    // pagerank contribution round over r0 (the pagerankBig construction)
-    val ow = edges.groupBy(col("src")).agg(count(lit(1)).as("wsum"))
-    val pe = graft.Scratch.track(edges.join(ow, Seq("src"))
-      .select(col("src"), col("dst"), expr("1000000L div wsum").as("p_ppm"))
-      .repartition(col("src")))
-    val nodes = graft.Scratch.track(ow.select(col("src").as("node")))
-    val n = nodes.count()
-    val teleport = (15L * Scale) / (100L * n)
-    val r0 = nodes.select(col("node"), lit(Scale / n).as("r")).localCheckpoint()
-    val pr = prRound(pe, nodes, teleport, r0)
-    // LPA vote round over self-labels (the lpa construction)
-    val ce = coPurchaseEdges(s, dir)
-    val se = graft.Scratch.track(
-      ce.select(col("u").as("x"), col("v").as("y"))
-        .unionByName(ce.select(col("v").as("x"), col("u").as("y")))
-        .repartition(col("x")))
-    val l0 = se.select(col("x").as("node")).distinct()
-      .select(col("node"), col("node").as("lbl"))
-      .localCheckpoint()
-    val lp = lpaRound(se, l0)
-    // closeness hop-2 expansion (hop 1 materialized first, like the loop)
-    val seeds = edges.select(col("src")).distinct()
-      .orderBy(col("src")).limit(ClosenessSources)
-      .select(col("src").as("s"))
-    val c0 = seeds.select(col("s"), col("s").as("node"), lit(0L).as("dist"))
-      .localCheckpoint(eager = false)
-    val n0 = c0.count()
-    val c1 = expandRound(edges, c0, c0.select(col("s"), col("node")), n0, n0,
-      1L, keyed = true).localCheckpoint(eager = false)
-    val n1 = c1.count()
-    val seen1 = c0.select(col("s"), col("node"))
-      .unionByName(c1.select(col("s"), col("node")))
-    val c2 = expandRound(edges, c1, seen1, n1, n0 + n1, 2L, keyed = true)
-    Seq(
-      ("pagerank_round", planOf(pr), pr),
-      ("lpa_round", planOf(lp), lp),
-      ("closeness_hop2", planOf(c2), c2))
-  }
 
   /** Community detection by synchronous label propagation (Raghavan et al.
     * 2007) over the co-purchase k-NN similarity graph — the third Pregel

@@ -1092,50 +1092,6 @@ object Sampling {
       .orderBy(col("cust"), col("rank"))
   }
 
-  /** Labeled stage frames for `graft.Decomp sample_negatives` (round-19
-    * verdict task 4): the fact join (the irreducible corpus exchange that
-    * defines the positives), the cust-domain distinct, the candidate
-    * build, the membership semi-probe, and the registered query — timed
-    * as prefixes so stage deltas price each operator. Stages skip the
-    * query's Scratch persist deliberately (each is timed in isolation; a
-    * shared persist would bill the first stage for every later one's
-    * input); `full` IS the registered query, persist included. The
-    * guarded-broadcast decision mirrors the query exactly.
-    */
-  def negativesDecompStages(s: SparkSession,
-      dir: String): Seq[(String, () => DataFrame)] = {
-    def joined = Tables.load(s, dir, "lineitem")
-      .select(col("l_orderkey"), col("l_partkey"))
-      .join(Tables.load(s, dir, "orders")
-        .select(col("o_orderkey"), col("o_custkey")),
-        col("l_orderkey") === col("o_orderkey"))
-      .select(col("o_custkey").cast("long").as("cust"),
-        col("l_partkey").cast("long").as("item"))
-    def np = Tables.load(s, dir, "part").agg(count(lit(1)).as("np"))
-    val custBound = Tables.load(s, dir, "customer").count()
-    val hintOk = custBound * NegDraws <= 8L * 1000 * 1000
-    def mb(df: org.apache.spark.sql.DataFrame) =
-      if (hintOk) broadcast(df) else df
-    def cands = joined.select(col("cust")).distinct()
-      .crossJoin(broadcast(np))
-      .select(col("cust"), explode(expr(
-        s"sequence(0, ${NegDraws - 1})")).as("j"), col("np"))
-      .withColumn("item", expr(
-        """1 + CAST(conv(substr(md5(concat(CAST(cust AS STRING), '#',
-          |  CAST(j AS STRING))), 1, 12), 16, 10) AS BIGINT) % np"""
-          .stripMargin))
-    def matched = joined
-      .join(mb(cands.select(col("cust"), col("item"))),
-        Seq("cust", "item"), "left_semi")
-      .distinct()
-    Seq(
-      "fact_join" -> (() => joined),
-      "cust_domain" -> (() => joined.select(col("cust")).distinct()),
-      "cands_build" -> (() => cands),
-      "probe_semi" -> (() => matched),
-      "full" -> (() => negatives.run(s, dir)))
-  }
-
   /** Training-shard export numbering — the distributed zipWithIndex: every
     * document gets a DENSE global row id in doc_id order, then
     * `shard = rowid div 256`, `pos = rowid mod 256` — the (file, offset)

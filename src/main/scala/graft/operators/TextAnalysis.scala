@@ -1592,44 +1592,6 @@ object TextAnalysis {
   def spanCoverage(docsDf: DataFrame): DataFrame =
     spanCoverageFromGrams(docsDf, posGramsOf(docsDf))
 
-  /** Labeled stage frames for `graft.Decomp dedup_spans` (round-17 board
-    * decomposition): prefixes of the [[spanCoverageFromGrams]] pipeline
-    * over the session gram memo, so (stage − previous stage) prices each
-    * operator — gram serve, the doc-frequency pass, the dup-gram join,
-    * the per-doc count, and the interval-union window sweep. Stages skip
-    * the query's Scratch persists deliberately: each is timed in
-    * isolation, and a shared persist would bill the first stage for every
-    * later one's input.
-    */
-  def spanDecompStages(s: SparkSession, dir: String): Seq[(String, () => DataFrame)] = {
-    // same long re-digest the registered query applies (see
-    // spanCoverageFromGrams) so the stage prices match its exchanges
-    def grams = gramFrame(s, dir).select(col("doc_id"), col("p"),
-      expr("CAST(conv(substr(g, 1, 15), 16, 10) AS BIGINT)").as("g"))
-    def dup = grams.select(col("doc_id"), col("g")).distinct()
-      .groupBy(col("g")).agg(count(lit(1)).as("n_docs"))
-      .filter(col("n_docs") >= 2).select(col("g"))
-    def dg = grams.join(dup, "g").select(col("doc_id"), col("p"))
-    val wPrev = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("doc_id")).orderBy(col("p"))
-      .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding, -1)
-    def cov = dg
-      .withColumn("e", (col("p") + lit(SpanGram)).cast("long"))
-      .withColumn("pmax", max(col("e")).over(wPrev))
-      .select(col("doc_id"),
-        (col("e") - greatest(col("p").cast("long"),
-          coalesce(col("pmax"), col("p").cast("long")))).as("add"))
-      .groupBy(col("doc_id")).agg(sum(col("add")).as("covered_tokens"))
-    Seq(
-      "grams_scan" -> (() => grams),
-      "dup_df" -> (() => dup),
-      "dg_join" -> (() => dg),
-      "perdoc_count" -> (() => dg.groupBy(col("doc_id"))
-        .agg(count(lit(1)).as("n_dup_grams"))),
-      "cov_sweep" -> (() => cov),
-      "full" -> (() => dedupSpans.run(s, dir)))
-  }
-
   private def spanCoverageFromGrams(docsDf: DataFrame,
       gramsIn: DataFrame): DataFrame = {
     val toks = docsDf

@@ -103,11 +103,11 @@ object BandedIntervalJoin extends Rule[LogicalPlan] with PredicateHelper {
       case _ => false
     }
 
-  /** Decompose `base + literal-offset` into (base, offset-in-long-domain):
+  /** Split `base + literal-offset` into (base, offset-in-long-domain):
     * a timestamp shifted by a day-time interval literal (offsets are
     * physical microseconds) or a long shifted by a long literal. Any other
     * expression is its own base with offset 0. `Long.MinValue` offsets are
-    * left un-decomposed — their negation overflows.
+    * left unsplit — their negation overflows.
     */
   private def shifted(e: Expression): (Expression, Long) = e match {
     case TimestampAddInterval(b, Literal(v: Long, _: DayTimeIntervalType), _) =>

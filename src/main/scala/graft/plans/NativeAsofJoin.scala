@@ -10,6 +10,7 @@ import org.apache.spark.sql.catalyst.plans.logical.{BinaryNode, LogicalPlan}
 import org.apache.spark.sql.catalyst.plans.physical.{ClusteredDistribution, Distribution, Partitioning}
 import org.apache.spark.sql.catalyst.util.TypeUtils
 import org.apache.spark.sql.execution.{BinaryExecNode, SparkPlan, SparkStrategy}
+import org.apache.spark.sql.execution.metric.SQLMetrics
 
 /** The engine's one WHOLE-OPERATOR Catalyst extension (the brief's option
   * (c): custom `LogicalPlan` + `SparkStrategy` + `SparkPlan`, registered
@@ -135,6 +136,9 @@ case class AsofJoinExec(
 
   override def output: Seq[Attribute] = left.output :+ matched
 
+  override lazy val metrics = Map(
+    "numOutputRows" -> SQLMetrics.createMetric(sparkContext, "number of output rows"))
+
   override def requiredChildDistribution: Seq[Distribution] =
     Seq(ClusteredDistribution(Seq(leftKey)), ClusteredDistribution(Seq(rightKey)))
 
@@ -160,6 +164,7 @@ case class AsofJoinExec(
     val keyOrd = TypeUtils.getInterpretedOrdering(leftKey.dataType)
     val timeOrd = TypeUtils.getInterpretedOrdering(leftTime.dataType)
     val outputAttrs = output
+    val numOutputRows = longMetric("numOutputRows")
     left.execute().zipPartitions(right.execute()) { (li, ri) =>
       val joined = new JoinedRow
       val payRow = new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(1)
@@ -223,6 +228,7 @@ case class AsofJoinExec(
             if (curKey != null && keyOrd.compare(curKey, lK) == 0) out = curPay
           }
           payRow.update(0, out)
+          numOutputRows += 1
           resultProj(joined(l, payRow))
         }
       }

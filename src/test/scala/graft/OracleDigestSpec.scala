@@ -15,7 +15,8 @@ import org.scalatest.funsuite.AnyFunSuite
   *
   * The oracle strings derive from the engine's geometry constants
   * (LshPlanes, Dedup band caps), so the digests are those of the default
-  * geometry: run with the `GRAFT_LSH_*` / band-cap env knobs unset.
+  * geometry: the spec session records no LSH corpus hint, and the
+  * `GRAFT_MAX_BUCKET` / `GRAFT_RP_DIMS` env knobs must be unset.
   */
 class OracleDigestSpec extends AnyFunSuite {
 

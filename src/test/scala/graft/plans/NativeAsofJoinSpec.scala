@@ -72,6 +72,19 @@ class NativeAsofJoinSpec extends SparkSpec {
     assert(out === Map(1L -> Some("a"), 2L -> None))
   }
 
+  test("asof metric: numOutputRows counts the rows the exec emits") {
+    val right = Seq((10L, 100L, "a"), (20L, 500L, "x")).toDF("rk", "rt", "pay")
+    val left = (1L to 9L).map(i => (i, if (i % 2 == 0) 10L else 20L, 100L * i))
+      .toDF("id", "lk", "lt")
+    val df = AsofJoinNode.asofJoin(left, "lk", "lt", right, "rk", "rt", "pay", "m")
+    val rows = df.collect().length
+    val execs = new org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {}
+      .collect(df.queryExecution.executedPlan) { case a: AsofJoinExec => a }
+    assert(execs.size === 1)
+    assert(execs.head.metrics.get("numOutputRows").map(_.value) === Some(rows.toLong))
+    assert(rows === 9)
+  }
+
   test("asof construction: mismatched key/time types rejected; self-join re-aliased") {
     val l = Seq((1L, "k", 10L)).toDF("id", "lk", "lt")
     val r = Seq((5, 5L, "p")).toDF("rk", "rt", "pay")  // rk is INT, lk STRING

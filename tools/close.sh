@@ -1,49 +1,39 @@
 #!/usr/bin/env bash
-# Round-close ritual: run the suite at the committed HEAD, then regenerate
-# PLANS.md and stamp it with the generating commit, so plan-affecting
-# changes can never ship with a stale plan dump again (the defect flagged
-# in rounds 12-14: a late plan-changing commit landed after the last
-# `graft.Explain` run and PLANS.md silently described the previous build).
+# Round-close ritual: run the suite, then regenerate plans/fingerprints.tsv
+# and stamp it with the src/main tree it was generated from, so
+# plan-affecting changes can never ship with a stale fingerprint file
+# (tools/check_plans.sh fails until the next regen).
 #
-# Order matters (round-16 advice): the TEST GATE runs FIRST — a failing
-# close used to exit after PLANS.md had already been regenerated and
-# stamped, leaving a half-updated working tree to untangle.
+# Order matters: the TEST GATE runs FIRST — a failing close must not leave
+# a half-updated working tree with a regenerated, stamped file.
 #
 # Usage: tools/close.sh [sfDir]     (default /root/testdata/sf0.001)
-# Then:  tools/check_plans.sh       fails while PLANS.md predates the last
+# Then:  tools/check_plans.sh       fails while the file predates the last
 #                                   src/main change — run both at close.
 set -euo pipefail
 cd "$(dirname "$0")/.."
 SF_DIR="${1:-/root/testdata/sf0.001}"
-if [ -n "$(git status --porcelain -- src/main)" ]; then
-  echo "close.sh: src/main has uncommitted changes — commit them first so" >&2
-  echo "the stamp names a commit that actually contains the plans" >&2
-  exit 1
-fi
-HEAD_SHA=$(git rev-parse HEAD)
-# Closing test count, recorded MECHANICALLY (rounds 14-15 both shipped a
-# BASELINE.md count one behind HEAD because the hand re-copy rule was
-# skippable): run the suite at this exact commit and append the verbatim
-# result to BASELINE.md. Appending (not editing prose) keeps the record
-# append-only and un-breakable by format drift; the newest stamped block
-# is the authoritative count for the round.
+TREE=$(tools/check_plans.sh --tree)
+# Closing test count, recorded MECHANICALLY: run the suite on this exact
+# src/main tree and append the verbatim result to BASELINE.md. Appending
+# (not editing prose) keeps the record append-only and un-breakable by
+# format drift; the newest stamped block is the authoritative count.
 TEST_LOG=$(mktemp)
 trap 'rm -f "$TEST_LOG"' EXIT
 if ! sbt -batch test > "$TEST_LOG" 2>&1; then
   tail -30 "$TEST_LOG"
-  echo "close.sh: TEST SUITE FAILED at $HEAD_SHA — fix before closing" >&2
+  echo "close.sh: TEST SUITE FAILED on src/main tree $TREE — fix before closing" >&2
   exit 1
 fi
-sbt -batch "runMain graft.Explain $SF_DIR PLANS.md"
-# stamp line goes right under the title; Explain rewrites the whole file,
-# so a previous stamp can never survive a regen
-sed -i "2i Generated at commit: $HEAD_SHA" PLANS.md
-echo "close.sh: PLANS.md regenerated and stamped at $HEAD_SHA"
+mkdir -p plans
+sbt -batch "runMain graft.Explain $SF_DIR plans/fingerprints.tsv"
+printf 'src/main tree: %s\nscale dir: %s\n' "$TREE" "$SF_DIR" > plans/fingerprints.stamp
+echo "close.sh: plans/fingerprints.tsv regenerated and stamped at src/main tree $TREE"
 tools/check_plans.sh
 {
   echo ""
-  echo "### Closing test count (tools/close.sh at commit $HEAD_SHA)"
+  echo "### Closing test count (tools/close.sh on src/main tree $TREE)"
   grep -E "^\[info\] (Tests:|Suites:|Passed:)" "$TEST_LOG" | sed 's/^\[info\] //'
 } >> BASELINE.md
 echo "close.sh: closing test count appended to BASELINE.md"
-echo "close.sh: done — commit PLANS.md and BASELINE.md as the final act"
+echo "close.sh: done — commit plans/fingerprints.tsv, its stamp and BASELINE.md"
