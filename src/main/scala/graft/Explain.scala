@@ -53,7 +53,7 @@ object Explain {
         "`PushedFilters`/`ReadSchema`; `(n)` spans are whole-stage codegen stages.\n" +
         plans.map { case (n, p) => s"\n## $n\n\n```\n$p```\n" }.mkString
     Files.writeString(Paths.get(outFile), text)
-    Verify.releaseMemos(spark)
+    SessionMemos.releaseAll(spark)
     spark.stop()
   }
 }

@@ -5,8 +5,8 @@ import scala.collection.concurrent.TrieMap
 import scala.jdk.CollectionConverters._
 
 /** Content-stamped cross-session fixture store — the amortization layer
-  * under every one-time derived artifact (ANN index tables, ranked top-k
-  * frames, graph edge sets, layout copies).
+  * under every one-time derived artifact (the trained ANN index, the gram
+  * frames, the dedup base index, layout copies).
   *
   * Before this store each fixture dir was tagged with the OWNING SESSION's
   * identity hash and deleted at session teardown, so every JVM re-derived
@@ -40,7 +40,7 @@ import scala.jdk.CollectionConverters._
   *
   * The class-file stamp is deliberately coarse (the producer class, not
   * its transitive closure): helper drift in another file would not flip
-  * the stamp. FixtureServeSpec's fixture ≡ rebuilt equality assertions and
+  * the stamp. Verify's fixture-posture parity pass (served ≡ inline) and
   * the DuckDB hash gate on every fixture-served query are the deep
   * staleness guards — a stale fixture cannot pass either.
   */

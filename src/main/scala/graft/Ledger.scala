@@ -4,6 +4,8 @@ import java.util.Properties
 import java.util.concurrent.ConcurrentHashMap
 import java.util.concurrent.atomic.AtomicLong
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.executor.TaskMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageSubmitted, SparkListenerTaskEnd}
 import org.apache.spark.sql.SparkSession
@@ -26,10 +28,13 @@ import org.apache.spark.sql.util.QueryExecutionListener
   *     that run broadcast builds and subqueries, so those jobs count
   *     toward their query (the job group would not: a broadcast exchange
   *     runs under a group of its own);
-  *   - the plan: the SQL metrics of the final (post-AQE) physical plan,
-  *     and of the plans of the cached frames it reads, from the
-  *     QueryExecution the caller ran, or else the last one the session's
-  *     plan listener reported inside the query;
+  *   - the plans: the SQL metrics of every (post-AQE) physical plan that
+  *     ran inside the query — the QueryExecution the caller ran and each
+  *     one the session's plan listener reported meanwhile (an iterative
+  *     query's per-hop `count()`, a memo's first materialization, a
+  *     write) — and of the plans of the cached frames they read. The
+  *     fingerprint is the final plan's alone: the caller's, else the last
+  *     one reported;
   *   - pauses: a 1 ms sleeper thread sums every wake-up later than 5 ms,
   *     the host stalls that neither wall clock nor steal% shows.
   *
@@ -42,12 +47,12 @@ final class Ledger(spark: SparkSession) extends AutoCloseable {
 
   private val sc = spark.sparkContext
   private val tasks = new TaskSums
-  private val plans = new LastPlan
+  private val plans = new Finished
   private val pauses = new Pauses
   private val scopes = new AtomicLong()
   // the value each SQL metric had when a record last read it: a cached
   // frame's plan keeps the metrics of the run that built it, and only
-  // that run's record counts them
+  // that run's record counts them, once however many of its plans read it
   private val seen = new java.util.WeakHashMap[SQLMetric, java.lang.Long]()
 
   sc.addSparkListener(tasks)
@@ -62,7 +67,7 @@ final class Ledger(spark: SparkSession) extends AutoCloseable {
     val scope = s"$name#${scopes.incrementAndGet()}"
     // events of earlier work must not land in this query's totals
     GraftInternal.drainListenerBus(sc)
-    plans.latest = None
+    plans.qes.clear()
     val (steal0, jiffies0) = cpuJiffies()
     val compiles0 = GraftSession.codegenCompiles()
     val pause0 = pauses.overshootNs.get
@@ -77,8 +82,10 @@ final class Ledger(spark: SparkSession) extends AutoCloseable {
     GraftInternal.drainListenerBus(sc)
     val sums = Option(tasks.sums.remove(scope)).getOrElse(new Sums)
     tasks.stageScope.values.removeIf(_ == scope)
-    val plan = outcome.toOption.flatten.orElse(plans.latest).map(_.executedPlan)
-    val ops = plan.map(operators).getOrElse(Nil)
+    val ran = plans.qes.asScala.toSeq
+    val last = outcome.toOption.flatten.orElse(ran.lastOption)
+    val plan = last.map(_.executedPlan)
+    val ops = (ran ++ last).distinct.flatMap(qe => operators(qe.executedPlan))
     Record(
       wallS = wallS,
       jobs = sums.jobs, stages = sums.stages, tasks = sums.tasks,
@@ -275,13 +282,13 @@ object Ledger extends AdaptiveSparkPlanHelper {
       }
   }
 
-  /** The last QueryExecution the session reported, for callers that run
-    * a query through an action (a write) and hold no QueryExecution.
+  /** Every QueryExecution the session reported since the last clear, in
+    * completion order.
     */
-  private final class LastPlan extends QueryExecutionListener {
-    @volatile var latest: Option[QueryExecution] = None
+  private final class Finished extends QueryExecutionListener {
+    val qes = new java.util.concurrent.ConcurrentLinkedQueue[QueryExecution]()
     override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
-      latest = Some(qe)
+      qes.add(qe)
     override def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = ()
   }
 

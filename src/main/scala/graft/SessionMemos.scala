@@ -100,6 +100,19 @@ object SessionMemos {
     emitted.toSeq
   }
 
+  /** End-of-session teardown of every module's session memos (pair
+    * frames, component labels, rankings, edge sets, gram frames,
+    * bucketed-table readiness), called by each entry point right before
+    * `spark.stop()` — see [[operators.Dedup.releaseSession]].
+    */
+  def releaseAll(spark: SparkSession): Unit = {
+    operators.Dedup.releaseSession(spark)
+    operators.Similarity.releaseSession(spark)
+    operators.Graph.releaseSession(spark)
+    operators.TextAnalysis.releaseSession(spark)
+    sources.Ingest.releaseSession(spark)
+  }
+
   /** Release every family whose LAST selected consumer (the end of its
     * [[benchOrder]] block) is `completed`. No-op for non-consumers.
     */

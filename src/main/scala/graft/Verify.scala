@@ -6,8 +6,8 @@ import java.nio.file.{Files, Paths}
   * local iteration aid; the driver always runs the 2-arg full form.
   *
   * BOTH POSTURES IN ONE DRIVER RUN (round 18, verdict task 2): the
-  * benches serve one-time derived artifacts (ANN indexes, ranked frames,
-  * graph edges, gram frames, dedup pair/base frames) from the
+  * benches serve the fixtures that still have a served path (the trained
+  * ANN index, the gram frames, the dedup base index) from the
   * content-stamped [[FixtureStore]], while a plain Verify dump rebuilds
   * them inline — so the driver's CORRECTNESS artifact used to gate only
   * the inline halves, with the served twin a builder-side companion
@@ -24,35 +24,21 @@ import java.nio.file.{Files, Paths}
 object Verify {
 
   /** The queries whose PLAN changes with a published fixture (they call
-    * FixtureStore.peek, or read a table the obtain writes): the memo
-    * families' registered consumers plus the four peek sites outside
-    * [[SessionMemos]]. VerifyParitySpec cross-checks every name against
+    * FixtureStore.peek, or read a table the obtain writes): the `grams`
+    * memo family's consumers plus the two served queries outside
+    * [[SessionMemos]]. SessionMemosSpec cross-checks every name against
     * the registry so a rename fails loudly.
     */
   val posturedQueries: Seq[String] =
-    (SessionMemos.families.flatMap(_.consumers) ++ Seq(
-      "dedup_semantic", "sample_prune_proto", "dedup_incr_index",
-      "ann_index_persist")).distinct.sorted
+    (SessionMemos.families.filter(_.name == "grams").flatMap(_.consumers) ++
+      Seq("dedup_incr_index", "ann_index_persist")).sorted
 
   private[graft] def obtainAll(spark: org.apache.spark.sql.SparkSession,
       sfDir: String): Unit = {
     operators.Similarity.ivfPqIndexWrite(spark, sfDir)
-    operators.Similarity.rankedTopKWrite(spark, sfDir)
-    operators.Similarity.semanticModelWrite(spark, sfDir)
-    operators.Graph.edgeFixtureWrite(spark, sfDir)
     operators.Dedup.baseIndexWrite(spark, sfDir)
-    operators.Dedup.pairFixtureWrite(spark, sfDir)
     operators.TextAnalysis.gramFixtureWrite(spark, sfDir)
-    operators.TextAnalysis.bigramFixtureWrite(spark, sfDir)
     Scratch.release(spark)
-  }
-
-  private[graft] def releaseMemos(spark: org.apache.spark.sql.SparkSession): Unit = {
-    operators.Dedup.releaseSession(spark)
-    operators.Similarity.releaseSession(spark)
-    operators.Graph.releaseSession(spark)
-    operators.TextAnalysis.releaseSession(spark)
-    sources.Ingest.releaseSession(spark)
   }
 
   def main(args: Array[String]): Unit = {
@@ -97,7 +83,7 @@ object Verify {
       // the inline pass left session memos resident — tear them down so
       // the re-run rebuilds THROUGH the store (peek hits), the posture
       // the benches run
-      releaseMemos(spark)
+      SessionMemos.releaseAll(spark)
       obtainAll(spark, sfDir)
       val checked = posturedQueries.filter(n => only.forall(_.contains(n)))
       val verdicts = checked.map { name =>
@@ -124,9 +110,7 @@ object Verify {
       System.err.println(
         s"[verify] fixture-posture parity: ${verdicts.count(_._2 == "match")}/${verdicts.size} match")
     }
-    // end-of-session memo teardown (pair frames, component labels,
-    // bucketed-table readiness) — see Dedup.releaseSession
-    releaseMemos(spark)
+    SessionMemos.releaseAll(spark)
     spark.stop()
     // a posture divergence must fail the DRIVER-VISIBLE run, not hide in
     // stderr — the artifact gates both postures or it gates neither

@@ -42,7 +42,7 @@ object LshPlanes {
   // tradeoffs shift, correctness never).
   // envInt lives on graft.Knobs (GraftSession reads knobs before the
   // corpus hint exists, so the reader can't be here); this delegation
-  // keeps the established call sites (Dedup.MaxBandBucket etc.)
+  // keeps the established call sites (Sampling's packing knobs etc.)
   private[graft] def envInt(name: String, default: Int, lo: Int, hi: Int): Int =
     graft.Knobs.envInt(name, default, lo, hi)
 

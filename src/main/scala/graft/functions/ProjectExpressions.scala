@@ -20,8 +20,10 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
   */
 object RpPlanes {
   /** Output width. 16 retains pairwise similarity to ~1/√16 relative error
-    * — the standard JL regime for a candidate-generation stage. */
-  val ProjDims: Int = LshPlanes.envInt("GRAFT_RP_DIMS", 16, 1, 64)
+    * — the standard JL regime for a candidate-generation stage. The
+    * embed_project oracle SQL interpolates it, so its committed digest
+    * pins this value. */
+  val ProjDims: Int = 16
   val Dims: Int = LshPlanes.Dims
 
   /** ±1 tensor flattened [j][i]: parity of the first hex nibble of

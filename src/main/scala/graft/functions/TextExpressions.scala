@@ -1,7 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.types.{DataType, LongType, StringType}
 import org.apache.spark.unsafe.Platform
@@ -75,18 +74,17 @@ object TextKernels {
   * chain it replaces (regexp_extract_all(NULL) is NULL and ANSI
   * size(NULL) is NULL). Parity with the regex form is property-asserted
   * in TextKernelsSpec; the DuckDB oracle keeps the regex as the
-  * independent replay.
+  * independent replay. The argument is a STRING (a non-string fails in
+  * the analyzer) holding well-formed UTF-8, as every parquet string
+  * column does: on malformed bytes the kernel and the regex path diverge
+  * ([[TextKernels.bpeTokenCount]]).
   */
-case class BpeTokenCount(child: Expression) extends UnaryExpression {
+case class BpeTokenCount(child: Expression) extends UnaryExpression
+    with ExpectsInputTypes {
   override def dataType: DataType = LongType
   override def nullable: Boolean = true
   override def prettyName: String = "bpe_token_count"
-  // analysis-time type check: bpe_token_count(non_string) must fail in the
-  // analyzer, not as a runtime ClassCastException or codegen compile error
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires a STRING argument, got ${child.dataType.catalogString}")
+  override def inputTypes = Seq(StringType)
 
   override def nullSafeEval(input: Any): Any =
     TextKernels.bpeTokenCount(input.asInstanceOf[UTF8String])

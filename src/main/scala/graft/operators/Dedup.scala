@@ -27,17 +27,15 @@ object Dedup {
     Tables.load(s, dir, "documents")
 
   /** Hot-bucket cap for every band-bucket self-join (see [[capBuckets]]
-    * for the full rationale). Env-tunable like the LSH geometry
-    * (production sizing depends on corpus boilerplate rates); EVERY
-    * consumer — the Spark pipelines, the generated DuckDB oracle SQL, and
-    * the streaming twin [[graft.streaming.NearDupStream]] — reads this one
-    * constant at JVM init, so the correctness gate and the stream≡batch
-    * candidate-set equivalence hold at any setting. Declared ABOVE the
-    * oracle-SQL vals that interpolate it during object init (a later
-    * plain val would still be 0 at that point).
+    * for the full rationale). EVERY consumer — the Spark pipelines, the
+    * generated DuckDB oracle SQL (whose committed digests pin this value),
+    * and the streaming twin [[graft.streaming.NearDupStream]] — reads this
+    * one constant, so the correctness gate and the stream≡batch
+    * candidate-set equivalence share it. Declared ABOVE the oracle-SQL
+    * vals that interpolate it during object init (a later plain val would
+    * still be 0 at that point).
     */
-  private[graft] val MaxBandBucket: Int =
-    graft.functions.LshPlanes.envInt("GRAFT_MAX_BUCKET", 1000, 2, 10000000)
+  private[graft] val MaxBandBucket: Int = 1000
 
   /** Exact dedup via content hash: one row per distinct text with copy
     * count and the id to keep (min). Hash-groupBy — a single shuffle on
@@ -389,68 +387,21 @@ object Dedup {
     */
   private[operators] def minhashSigs(s: SparkSession, dir: String): DataFrame =
     pairCache.getOrElseUpdate((s, dir, "minhash_sig"),
-      (graft.FixtureStore.peek("deduppairs", dir) match {
-        case Some(root) => s.read.parquet(s"$root/sig")
-        case None => minhashSignatures(docs(s, dir))
-      }).persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+      minhashSignatures(docs(s, dir))
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
 
   /** Memoized [[minhashCandidatesFromSig]] over the session's corpus. */
   private[operators] def minhashPairs(s: SparkSession, dir: String): DataFrame =
     pairCache.getOrElseUpdate((s, dir, "minhash"),
-      (graft.FixtureStore.peek("deduppairs", dir) match {
-        case Some(root) => s.read.parquet(s"$root/minhash")
-        case None => minhashCandidatesFromSig(minhashSigs(s, dir))
-      }).persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+      minhashCandidatesFromSig(minhashSigs(s, dir))
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
 
   /** Memoized [[embedNearPairs]] over the session's embedding table. */
   private[operators] def embedPairs(s: SparkSession, dir: String): DataFrame =
     pairCache.getOrElseUpdate((s, dir, "embed"),
-      (graft.FixtureStore.peek("deduppairs", dir) match {
-        case Some(root) => s.read.parquet(s"$root/embed")
-        case None => embedNearPairs(Similarity.hyperplaneSignatures(s,
-          Tables.load(s, dir, "embeddings")))
-      }).persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-
-  /** One-time persisted copy of the near-dup family's four derived frames
-    * (minhash signatures, minhash candidate pairs, embedding candidate
-    * pairs, CC cluster labels) — the [[graft.operators.TextAnalysis
-    * .gramFixtureWrite]] storage posture applied to the pair memos: a
-    * production pipeline derives its candidate pairs and cluster
-    * assignment once per corpus version and every consumer reads the
-    * materialization. Before this fixture the first block consumer paid
-    * the whole derivation inside its first timed pass (measured 76–126 s
-    * at ×100 in a fixture-served session, bench_r16_x100_evict2) — the
-    * cost belongs with the other one-time builds, off the query clock.
-    * Hybrid serving as with the gram frames: accessors load the parquet
-    * into the session memo once, later consumers hit memory. Stamped with
-    * the LSH geometry knobs ([[embedNearPairs]] derives from LshPlanes)
-    * so a geometry change rebuilds like a data change; content is
-    * exact-integer deterministic, so fixture ≡ inline rebuild and the
-    * DuckDB gate pins both sides (GRAFT_VERIFY_FIXTURES).
-    */
-  def pairFixtureWrite(s: SparkSession, dir: String): String =
-    graft.FixtureStore.obtain("deduppairs", dir,
-      Seq("documents", "embeddings"), getClass,
-      extra = Seq(
-        s"knob:lsh_tables=${graft.functions.LshPlanes.NumTables}",
-        s"knob:lsh_bits=${graft.functions.LshPlanes.TableBits}")) { root =>
-      import org.apache.spark.sql.SaveMode
-      val sig = minhashSignatures(docs(s, dir))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      sig.write.mode(SaveMode.Overwrite).parquet(s"$root/sig")
-      val pairs = minhashCandidatesFromSig(sig)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      pairs.write.mode(SaveMode.Overwrite).parquet(s"$root/minhash")
-      connectedComponents(pairs)
-        .select(col("id").as("doc_id"), col("label"))
-        .write.mode(SaveMode.Overwrite).parquet(s"$root/labels")
-      pairs.unpersist(blocking = false)
-      sig.unpersist(blocking = false)
       embedNearPairs(Similarity.hyperplaneSignatures(s,
         Tables.load(s, dir, "embeddings")))
-        .write.mode(SaveMode.Overwrite).parquet(s"$root/embed")
-      ()
-    }
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
 
   /** Explicit end-of-session teardown for the family memos: unpersists
     * every pair frame and component-label checkpoint cached for `s` and
@@ -465,13 +416,7 @@ object Dedup {
       pairCache.remove(k).foreach(_.unpersist(blocking = false))
     }
     componentCache.keys.filter(_._1 eq s).foreach { k =>
-      componentCache.remove(k).foreach { df =>
-        // fixture-served labels are plain persisted frames, search-built
-        // ones are checkpoint-backed — release either shape (unpersist is
-        // a no-op on checkpoints, releaseCheckpoint on parquet reads)
-        df.unpersist(blocking = false)
-        releaseCheckpoint(df)
-      }
+      componentCache.remove(k).foreach(releaseCheckpoint)
     }
   }
 
@@ -591,16 +536,8 @@ object Dedup {
 
   private[operators] def componentLabels(s: SparkSession, dir: String): DataFrame =
     componentCache.getOrElseUpdate((s, dir),
-      graft.FixtureStore.peek("deduppairs", dir) match {
-        // labels are deterministic content (min member doc_id per
-        // component), so the stored assignment ≡ a fresh search; the
-        // served frame is persisted (not checkpoint-backed) and
-        // releaseSession unpersists either shape
-        case Some(root) => s.read.parquet(s"$root/labels")
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        case None => connectedComponents(minhashPairs(s, dir))
-          .select(col("id").as("doc_id"), col("label"))
-      })
+      connectedComponents(minhashPairs(s, dir))
+        .select(col("id").as("doc_id"), col("label")))
 
   /** Near-dup clustering end-to-end: MinHash+LSH candidate pairs →
     * connected components → one cluster id (the minimum member doc_id) per

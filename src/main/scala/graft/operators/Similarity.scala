@@ -1248,18 +1248,11 @@ object Similarity {
     case "sq8"   => annSq8
   }
 
-  private val RankMethods = Seq("brute", "lsh", "ivf", "pq", "ivfpq", "sq8")
-
-  /** The ranked frame behind `method`, computed inline — the fixture-miss
-    * fallback and the fixture builder's source. "bm25" (round 19, verdict
-    * task 6) is the LEXICAL ranking [[retrievalRrf]] fuses: before it
-    * joined the family, the six dense rankings were fixture-served while
-    * the BM25 top-10 re-ran its postings pipeline on every fusion readout
-    * (~2 s at ×100) — a deployment computes ALL its per-corpus-version
-    * rankings once, lexical included. Schema (query_id, doc_id, rn),
-    * exact integer ranks, so the fixture serve is bit-identical to the
-    * inline build (hash-gated via retrieval_rrf's oracle + the Verify
-    * fixture-posture parity pass).
+  /** The ranked frame behind `method`. "bm25" (round 19, verdict task
+    * 6) is the LEXICAL ranking [[retrievalRrf]] fuses: before it joined
+    * the family, the BM25 top-10 re-ran its postings pipeline on every
+    * fusion readout (~2 s at ×100) while the six dense rankings were
+    * shared. Schema (query_id, doc_id, rn), exact integer ranks.
     */
   private def rankedMethodDf(s: SparkSession, dir: String,
       method: String): DataFrame = method match {
@@ -1270,58 +1263,14 @@ object Similarity {
     case m => rankedMethodQ(m).run(s, dir)
   }
 
-  /** One-time persisted copy of the six ranked top-k frames — the
-    * [[ivfPqIndexWrite]] train-once/serve-from-storage shape applied to
-    * the RANKINGS the metric readouts consume: a deployment computes its
-    * retrieval rankings once per corpus version and every quality readout
-    * (recall, MRR, contrastive mining, fusion) reads the stored table.
-    * Content-stamped ([[graft.FixtureStore]]) so unchanged corpus + code
-    * reuse the stored frames across sessions. Bench builds this outside
-    * the timed window (`ann_rank_fixture_s`) so the timed metric queries
-    * measure the readout, not the six pipelines; first consumer still
-    * pays the build when the fixture was never written (Verify, specs) —
-    * the memo fallback in [[rankedTopK]].
-    * Frames are tiny (≤ queries·k rows), so one file per method.
-    */
-  def rankedTopKWrite(s: SparkSession, dir: String): String =
-    graft.FixtureStore.obtain("annrank", dir,
-      // "documents" joined the input stamp with the bm25 ranking (round
-      // 19): the lexical frame's content depends on the text corpus, so a
-      // corpus change must flip the stamp exactly like an embedding change
-      Seq("embeddings", "documents"), getClass,
-      // the LSH ranking's content depends on the geometry knobs — a knob
-      // change must flip the stamp like a code change, or a fixture built
-      // under one geometry would serve a session running another
-      extra = Seq(
-        s"knob:lsh_tables=${graft.functions.LshPlanes.NumTables}",
-        s"knob:lsh_bits=${graft.functions.LshPlanes.TableBits}")) { root =>
-      (RankMethods :+ "bm25").foreach { m =>
-        rankedMethodDf(s, dir, m)
-          .coalesce(1).write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-          .parquet(s"$root/$m")
-      }
-      graft.Scratch.release(s)
-    }
-
   private[operators] def rankedTopK(s: SparkSession, dir: String, method: String): DataFrame =
-    rankCache.getOrElseUpdate((s, dir, method), {
-      // serve from the persisted fixture when it exists — a ranked-frame
-      // scan instead of the pipeline rebuild; values are identical (exact
-      // integer ranks/sims, hash-gated) and every consumer re-sorts
-      val base = graft.FixtureStore.peek("annrank", dir) match {
-        case Some(root) => s.read.parquet(s"$root/$method")
-        case None => rankedMethodDf(s, dir, method)
-      }
-      base.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    })
+    rankCache.getOrElseUpdate((s, dir, method),
+      rankedMethodDf(s, dir, method)
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
 
   /** End-of-session teardown for the SESSION-scoped memos ([[rankCache]],
     * [[semModelCache]]) — the [[Dedup.releaseSession]] contract
-    * (mid-session the memo's whole point is to stay). The on-disk fixture
-    * dirs are deliberately NOT deleted anymore: they live in the
-    * content-stamped [[graft.FixtureStore]], owned by the corpus version
-    * rather than the session, and the next session reusing them is the
-    * point (stale versions are reaped at the next build). */
+    * (mid-session the memo's whole point is to stay). */
   def releaseSession(s: SparkSession): Unit = {
     releaseRankMemos(s)
     semModelCache.keys.filter(_._1 eq s).foreach(semModelCache.remove)
@@ -1693,49 +1642,13 @@ object Similarity {
   private val semModelCache =
     scala.collection.concurrent.TrieMap.empty[(SparkSession, String), Seq[Seq[Long]]]
 
-  /** One-time persisted measured-K semantic model — [[ivfPqIndexWrite]]'s
-    * train-once/serve-from-storage shape for the SemDeDup quantizer: both
-    * consumers ([[dedupSemantic]], [[sampleProto]]) re-trained the same
-    * [[KmIters]]-round model per invocation, tripling the assignment cost
-    * they actually measure. Content-stamped ([[graft.FixtureStore]]) so
-    * unchanged corpus + code reuse the trained model across sessions.
-    * Bench builds this outside the timed window (`sem_model_fixture_s`);
-    * [[semanticModel]] then serves the K×Dims centroid table FROM the
-    * parquet (bounded-model collect).
-    */
-  def semanticModelWrite(s: SparkSession, dir: String): String =
-    graft.FixtureStore.obtain("semmodel", dir,
-      Seq("embeddings"), getClass) { root =>
-      import s.implicits._
-      val base = semanticCorpus(s, dir)
-      val cents = trainCoarse(s,
-        base.select(col("vec_id"), col("qv")), semK(base.count()))
-      cents.zipWithIndex
-        .flatMap { case (cv, cid) => cv.zipWithIndex.map { case (c, d) =>
-          (cid.toLong, d.toLong, c) } }
-        .toDF("cid", "dim", "c")
-        .coalesce(1).write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-        .parquet(s"$root/centroids")
-    }
-
-  /** The measured-K semantic model for a corpus dir — served from the
-    * persisted fixture when one exists, trained otherwise; memoized per
-    * (session, dir) so the two consumers share one model either way. */
+  /** The measured-K semantic model for a corpus dir, trained once and
+    * memoized per (session, dir), so both consumers ([[dedupSemantic]],
+    * [[sampleProto]]) share one [[KmIters]]-round training. */
   private[operators] def semanticModel(s: SparkSession, dir: String): Seq[Seq[Long]] =
     semModelCache.getOrElseUpdate((s, dir), {
-      import s.implicits._
-      graft.FixtureStore.peek("semmodel", dir) match {
-        case Some(root) =>
-          s.read.parquet(s"$root/centroids")
-            .select(col("cid"), col("dim"), col("c"))
-            .as[(Long, Long, Long)].collect()
-            .groupBy(_._1).toSeq.sortBy(_._1)
-            .map(_._2.sortBy(_._2).map(_._3).toSeq)
-        case None =>
-          val base = semanticCorpus(s, dir)
-          trainCoarse(s, base.select(col("vec_id"), col("qv")),
-            semK(base.count()))
-      }
+      val base = semanticCorpus(s, dir)
+      trainCoarse(s, base.select(col("vec_id"), col("qv")), semK(base.count()))
     })
 
   /** Full per-document verdict from a (vec_id, qv, nrm) frame — shared by
@@ -1825,9 +1738,8 @@ object Similarity {
   }
 
   val dedupSemantic: Q = Q("dedup_semantic", semanticOracle) { (s, dir) =>
-    // the model comes from the shared per-(session, dir) memo — served
-    // from the persisted fixture when Bench built one, trained once and
-    // shared with sample_prune_proto otherwise
+    // the model comes from the shared per-(session, dir) memo, trained
+    // once and shared with sample_prune_proto
     semanticVerdict(s, semanticCorpus(s, dir), Some(semanticModel(s, dir)))
   }
 
@@ -2071,12 +1983,10 @@ object Similarity {
       |  CAST(rrf_scaled AS BIGINT) AS rrf_scaled, CAST(bm25_rn AS BIGINT) AS bm25_rn,
       |  CAST(cos_rn AS BIGINT) AS cos_rn, CAST(rn AS BIGINT) AS rn
       |FROM r WHERE rn <= 10 ORDER BY query_id, rn""".stripMargin) { (s, dir) =>
-    // BOTH halves come from the ranked-frame memo/fixture ([[rankedTopK]])
-    // since round 19: the six dense rankings were already fixture-served
-    // while the BM25 postings pipeline re-ran on every fusion readout —
-    // now the lexical top-10 is the seventh stored ranking (first
-    // consumer still pays the build when no fixture exists: Verify's
-    // inline posture, specs)
+    // BOTH halves come from the ranked-frame memo ([[rankedTopK]]) since
+    // round 19: the six dense rankings were already shared while the BM25
+    // postings pipeline re-ran on every fusion readout — now the lexical
+    // top-10 is the seventh memoized ranking
     val bm = rankedTopK(s, dir, "bm25")
       .select(col("query_id"), col("doc_id"), col("rn").as("rb"))
     val dn = rankedTopK(s, dir, "brute")

@@ -520,31 +520,12 @@ object TextAnalysis {
       .groupBy(col("doc_id"), col("w1"), col("w2"))
       .agg(count(lit(1)).as("n"))
 
-  /** One-time persisted (doc_id, w1, w2, n) frame per corpus version —
-    * the same storage posture as [[gramFixtureWrite]]: the bigram
-    * explode+aggregate is the first-payer cost BOTH its consumers
-    * otherwise rebuild (text_predictability's p1 carried an 11.6 s
-    * bd-build spike at ×100, NOTES.md round 16), so it is built once per
-    * (corpus, code) and served from parquet across sessions. */
-  def bigramFixtureWrite(s: SparkSession, dir: String): String =
-    graft.FixtureStore.obtain("bigrams", dir, Seq("documents"), getClass) {
-      root =>
-        bdOf(docs(s, dir))
-          .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-          .parquet(s"$root/bd")
-        ()
-    }
-
-  /** Memoized per-document bigram counts — hybrid posture like
-    * [[gramFrame]]: first consumer loads the persisted fixture (or
-    * derives inline when no fixture exists — first-payer honesty), later
-    * consumers in the session hit the memo. */
+  /** Memoized per-document bigram counts: the first consumer derives the
+    * frame, later consumers in the session read the persisted copy. */
   private[operators] def bdFrame(s: SparkSession, dir: String): DataFrame =
     gramCache.getOrElseUpdate((s, dir, "bd"),
-      (graft.FixtureStore.peek("bigrams", dir) match {
-        case Some(root) => s.read.parquet(s"$root/bd")
-        case None => bdOf(docs(s, dir))
-      }).persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+      bdOf(docs(s, dir))
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
 
   /** Release ONLY the bigram memo (the `bigrams` family's
     * [[graft.SessionMemos]] hook — it must not evict the gram family's
@@ -1175,7 +1156,7 @@ object TextAnalysis {
     val byW1 = org.apache.spark.sql.expressions.Window.partitionBy(col("w1"))
     val top = byW1.orderBy(col("c").desc, col("w2"))
     // corpus pair counts re-aggregate the SHARED per-doc frame (`bd`
-    // memo/fixture — [[bdFrame]]): Σ per-doc n ≡ the occurrence count
+    // memo — [[bdFrame]]): Σ per-doc n ≡ the occurrence count
     // the direct explode produced, and the tokenize pass is shared with
     // text_predictability instead of run twice per session
     bdFrame(s, dir)
@@ -1326,8 +1307,8 @@ object TextAnalysis {
       |SELECT doc_id, n_bigrams,
       |  CAST(tot // n_bigrams AS BIGINT) AS predict_ppm
       |FROM sc ORDER BY doc_id""".stripMargin) { (s, dir) =>
-    // the (doc, bigram) frame is the session memo / store fixture shared
-    // with text_bigram_lm ([[bdFrame]]) — it was a per-query Scratch
+    // the (doc, bigram) frame is the session memo shared with
+    // text_bigram_lm ([[bdFrame]]) — it was a per-query Scratch
     // persist through round 16, which meant the corpus tokenize+explode
     // re-ran inside this query's first pass every session (the 11.6 s
     // ×100 p1 spike the round-16 sidecars recorded)

@@ -40,9 +40,9 @@ object NearDupStream {
   case class NearDupCandidate(id1: Long, id2: Long, band: Int)
   case class BucketState(ids: List[Long])
 
-  /** THE batch-side hot-bucket cap — one constant (env knob
-    * GRAFT_MAX_BUCKET), not an independent copy, so the stream≡batch
-    * candidate-set equivalence cannot silently break by changing one side.
+  /** THE batch-side hot-bucket cap — one constant, not an independent
+    * copy, so the stream≡batch candidate-set equivalence cannot silently
+    * break by changing one side.
     */
   private def MaxBucket: Int = graft.operators.Dedup.MaxBandBucket
 

@@ -11,7 +11,8 @@ import org.apache.spark.sql.graft.GraftInternal
 /** [[Ledger]] on the shared session at sf0.001: its work counters and
   * fingerprint repeat across runs of one query, a broadcast build's job
   * counts toward the query that ran it, and a plan run through an action
-  * reaches the record through the session's plan listener.
+  * (a write, or a count() while the query is built) reaches the record
+  * through the session's plan listener.
   */
 class LedgerSpec extends SparkSpec {
 
@@ -68,6 +69,22 @@ class LedgerSpec extends SparkSpec {
     assert(build.nonEmpty, jobs.map(prop(_, "spark.job.tags")))
     assert(build.forall(prop(_, Ledger.ScopeProperty).isDefined))
     assert(r.jobs === jobs.size.toLong, r.toJson)
+  }
+
+  test("a count() run while the query is built has its operators in the record") {
+    val r = ledger.measure("spec-hops") {
+      // an iterative query's per-hop action: it runs before the final
+      // plan exists and shares no operator with it
+      spark.range(1000).select((col("id") % 7).as("hop_key"))
+        .groupBy(col("hop_key")).count().count()
+      val qe = spark.range(3).toDF("id").queryExecution
+      qe.toRdd.foreach(_ => ())
+      Some(qe)
+    }
+    assert(r.error.isEmpty, r.error)
+    assert(r.topRows.exists(_._1 == "HashAggregate[hop_key]"), r.toJson)
+    // the fingerprint stays the final plan's
+    assert(!r.fingerprint.contains("HashAggregate"), r.fingerprint)
   }
 
   test("a write reaches its record through the plan listener; pauses read >= 0") {

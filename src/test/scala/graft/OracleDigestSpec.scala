@@ -15,8 +15,7 @@ import org.scalatest.funsuite.AnyFunSuite
   *
   * The oracle strings derive from the engine's geometry constants
   * (LshPlanes, Dedup band caps), so the digests are those of the default
-  * geometry: the spec session records no LSH corpus hint, and the
-  * `GRAFT_MAX_BUCKET` / `GRAFT_RP_DIMS` env knobs must be unset.
+  * geometry: the spec session records no LSH corpus hint.
   */
 class OracleDigestSpec extends AnyFunSuite {
 

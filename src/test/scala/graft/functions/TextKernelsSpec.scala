@@ -51,6 +51,13 @@ class TextKernelsSpec extends SparkSpec {
     }
   }
 
+  test("bpe_token_count of a non-string fails in the analyzer as a typed mismatch") {
+    val e = intercept[org.apache.spark.sql.AnalysisException] {
+      spark.range(1).selectExpr("bpe_token_count(1)").collect()
+    }
+    assert(e.getCondition === "DATATYPE_MISMATCH.UNEXPECTED_INPUT_TYPE", e.getMessage)
+  }
+
   test("bpe_token_count on the real corpus equals the regex form row-for-row") {
     val d = graft.sources.Tables.load(spark, sf("sf0.001"), "documents")
     val diff = d.select(

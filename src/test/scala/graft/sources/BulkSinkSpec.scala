@@ -3,6 +3,7 @@ package graft.sources
 import java.util.concurrent.{ConcurrentLinkedQueue, LinkedBlockingQueue, TimeUnit}
 
 import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+import org.apache.spark.sql.graft.GraftInternal
 import org.apache.spark.sql.util.QueryExecutionListener
 
 import graft.SparkSpec
@@ -70,6 +71,9 @@ class BulkSinkSpec extends SparkSpec {
       override def onFailure(funcName: String, qe: QueryExecution,
           exception: Exception): Unit = ()
     }
+    // an earlier test's write may still have its plan event in flight on
+    // the listener bus: deliver it before listening, or poll() takes it
+    GraftInternal.drainListenerBus(spark.sparkContext)
     spark.listenerManager.register(listener)
     val docs = try {
       (1L to 7L).toDF("id").repartition(2)
