@@ -1,5 +1,7 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.SparkSession
 
 /** One place for the engine's session config — Verify/Bench/Explain all
@@ -115,10 +117,11 @@ object GraftSession {
     // Record the embeddings corpus size for LSH geometry auto-sizing
     // BEFORE any query object initializes (the knob-free path is the
     // sized path — LshPlanes scaladoc). Parquet count() is
-    // metadata-only; a dir without an embeddings table keeps defaults.
+    // metadata-only, and the declared schema spares a footer-inference
+    // job; a dir without an embeddings table keeps defaults.
     dataDir.foreach { dir =>
       try {
-        val emb = spark.read.parquet(s"$dir/embeddings.parquet")
+        val emb = sources.Tables.load(spark, dir, "embeddings")
         val n = emb.count()
         Knobs.sizeLshFor(n)
         System.err.println(s"[graft] LSH corpus hint: $n vectors in $dir")
@@ -150,7 +153,43 @@ object GraftSession {
     // lineage) warns through the same logger, and that warning must stay
     // visible.
     suppressByDesignCheckpointWarning()
+    leanHadoopConf(spark)
     spark
+  }
+
+  /** Drop the packaged Hadoop defaults from the session's Hadoop
+    * configuration. Spark serializes that configuration into every file
+    * write task, every parquet footer-inference task and the broadcast of
+    * every file scan. With the defaults it holds about 1,080 entries (520
+    * from yarn-default.xml, 357 core-default.xml, 194 mapred-default.xml),
+    * about 113 KB as a `SerializableConfiguration`, 5–8 ms to deserialize
+    * per task; trimmed, `newHadoopConf()` holds at most 78 entries in
+    * under 11 KB. Executors rebuild the shipped conf with
+    * `new Configuration(false)`, so they see only what is shipped, and
+    * Hadoop components read their keys with code defaults that mirror the
+    * XML values.
+    *
+    * An entry goes when every source it came from is a `*-default.xml`.
+    * Kept: `*-site.xml` values, `spark.hadoop.*` keys, the keys Spark sets,
+    * and class bindings (keys ending in `.impl`): `fs.AbstractFileSystem
+    * .file.impl` has no code default, and without it
+    * `CheckpointFileManager.create` falls back from the FileContext-based
+    * manager to the FileSystem-based one, which Spark warns does not
+    * guarantee streaming correctness.
+    *
+    * Order: `Configuration.addDefaultResource` reloads every registered
+    * conf from its resources, which silently restores every dropped
+    * default. Loading the local FileSystem's services registers
+    * hdfs-default.xml that way, so they are loaded first.
+    */
+  def leanHadoopConf(spark: SparkSession): Unit = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    org.apache.hadoop.fs.FileSystem.getLocal(conf)
+    val defaults = conf.iterator.asScala.map(_.getKey).filter { k =>
+      !k.endsWith(".impl") && Option(conf.getPropertySources(k))
+        .exists(s => s.nonEmpty && s.forall(_.endsWith("-default.xml")))
+    }.toList
+    defaults.foreach(conf.unset)
   }
 
   private def suppressByDesignCheckpointWarning(): Unit = {

@@ -27,7 +27,8 @@ import org.apache.spark.sql.util.QueryExecutionListener
   *     around the query; Spark copies local properties into the threads
   *     that run broadcast builds and subqueries, so those jobs count
   *     toward their query (the job group would not: a broadcast exchange
-  *     runs under a group of its own);
+  *     runs under a group of its own). `deser_s` is the time the tasks
+  *     spent deserializing before they ran, which `task_s` leaves out;
   *   - the plans: the SQL metrics of every (post-AQE) physical plan that
   *     ran inside the query — the QueryExecution the caller ran and each
   *     one the session's plan listener reported meanwhile (an iterative
@@ -90,6 +91,7 @@ final class Ledger(spark: SparkSession) extends AutoCloseable {
       wallS = wallS,
       jobs = sums.jobs, stages = sums.stages, tasks = sums.tasks,
       taskS = sums.runMs / 1e3, cpuS = sums.cpuNs / 1e9,
+      deserS = sums.deserMs / 1e3,
       inputRows = sums.inputRows,
       shuffleBytes = sums.shuffleBytes, shuffleRecords = sums.shuffleRecords,
       spillBytes = sums.spillBytes, peakExecMemBytes = sums.peakExecMem,
@@ -128,7 +130,7 @@ object Ledger extends AdaptiveSparkPlanHelper {
 
   final case class Record(
       wallS: Double, jobs: Long, stages: Long, tasks: Long,
-      taskS: Double, cpuS: Double, inputRows: Long,
+      taskS: Double, cpuS: Double, deserS: Double, inputRows: Long,
       shuffleBytes: Long, shuffleRecords: Long, spillBytes: Long,
       peakExecMemBytes: Long, pauseS: Double, stealPct: Double,
       compiles: Long, storageAfterMb: Double,
@@ -140,7 +142,8 @@ object Ledger extends AdaptiveSparkPlanHelper {
       def pairs(xs: Seq[(String, Double)]) =
         xs.map { case (k, v) => s"[${str(k)},${num(v)}]" }.mkString("[", ",", "]")
       s"""{"wall_s":${num(wallS)},"jobs":$jobs,"stages":$stages,"tasks":$tasks,""" +
-        s""""task_s":${num(taskS)},"cpu_s":${num(cpuS)},"input_rows":$inputRows,""" +
+        s""""task_s":${num(taskS)},"cpu_s":${num(cpuS)},"deser_s":${num(deserS)},""" +
+        s""""input_rows":$inputRows,""" +
         s""""shuffle_bytes":$shuffleBytes,"shuffle_records":$shuffleRecords,""" +
         s""""spill_bytes":$spillBytes,"peak_exec_mem_bytes":$peakExecMemBytes,""" +
         s""""pause_s":${num(pauseS)},"steal_pct":${num(stealPct)},""" +
@@ -244,13 +247,14 @@ object Ledger extends AdaptiveSparkPlanHelper {
     * bus's thread until the bus is drained.
     */
   private final class Sums {
-    var jobs, stages, tasks, runMs, cpuNs, inputRows = 0L
+    var jobs, stages, tasks, runMs, cpuNs, deserMs, inputRows = 0L
     var shuffleBytes, shuffleRecords, spillBytes, peakExecMem = 0L
 
     def add(m: TaskMetrics): Unit = {
       tasks += 1
       runMs += m.executorRunTime
       cpuNs += m.executorCpuTime
+      deserMs += m.executorDeserializeTime
       inputRows += m.inputMetrics.recordsRead
       shuffleBytes += m.shuffleWriteMetrics.bytesWritten
       shuffleRecords += m.shuffleWriteMetrics.recordsWritten

@@ -1,9 +1,10 @@
 package graft.operators
 
 import graft.Q
-import graft.sources.Tables
+import graft.sources.{Ingest, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{IntegerType, LongType, StructField, StructType}
 
 /** Deduplication operators over the `documents` / `embeddings` tables —
   * the training-data-pipeline extensions beyond the reference's own surface
@@ -1109,6 +1110,17 @@ object Dedup {
       graft.Scratch.release(s)
     }
 
+  /** Declared schemas of the two tables [[baseIndexWrite]] stores.
+    * [[incrIndex]] reads them through [[graft.sources.Ingest.parquet]],
+    * the way [[Tables.load]] reads every testdata table, so the serve path
+    * launches no footer-inference job per query.
+    */
+  private[operators] val BaseIdxSchema: StructType = StructType(Seq(
+    StructField("doc_id", LongType), StructField("band", IntegerType),
+    StructField("bkey", LongType)))
+  private[operators] val BaseMetaSchema: StructType = StructType(
+    Seq("lo", "hi", "mid").map(StructField(_, LongType)))
+
   /** [[bandFrame]] with the 32-hex-char band key re-digested to a 60-bit
     * long MAP-SIDE, before any exchange — the 6bf62fb gram-key pattern
     * applied to the incremental index (round 18): the stored base index,
@@ -1153,12 +1165,13 @@ object Dedup {
     // the same values, proven by the fixture ≡ rebuilt spec + hash gate
     val (mid, baseIdx) = graft.FixtureStore.peek("dedupbase", dir) match {
       case Some(root) =>
-        val m = s.read.parquet(s"$root/meta").collect()(0).getAs[Long]("mid")
+        val m = Ingest.parquet(s, s"$root/meta", BaseMetaSchema)
+          .collect()(0).getAs[Long]("mid")
         // no Scratch persist here: the stored index is a cheap columnar
         // scan (unlike the inline signature pipeline below, which IS
         // worth caching for its three consumers) — re-reading parquet
         // keeps the serve plan visibly storage-backed
-        (m, s.read.parquet(s"$root/baseidx"))
+        (m, Ingest.parquet(s, s"$root/baseidx", BaseIdxSchema))
       case None =>
         // 2-value model collect → literal midpoint → pushed half filters
         val r = d.agg(min(col("doc_id")).as("lo"), max(col("doc_id")).as("hi"))

@@ -1,9 +1,10 @@
 package graft.operators
 
 import graft.Q
-import graft.sources.Tables
+import graft.sources.{Ingest, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{IntegerType, LongType, StringType, StructField, StructType}
 
 /** Text-analysis operators over `documents` — the quality/filter stage of a
   * training-data pipeline (extensions beyond the reference; BASELINE.json
@@ -479,6 +480,17 @@ object TextAnalysis {
       ()
     }
 
+  /** Declared schemas of the two tables [[gramFixtureWrite]] stores:
+    * [[gramFrame]] and [[gramSet]] read them through
+    * [[graft.sources.Ingest.parquet]], so serving them launches no
+    * footer-inference job.
+    */
+  private[operators] val GramPosSchema: StructType = StructType(Seq(
+    StructField("doc_id", LongType), StructField("p", IntegerType),
+    StructField("g", StringType)))
+  private[operators] val GramDistSchema: StructType = StructType(Seq(
+    StructField("doc_id", LongType), StructField("g", StringType)))
+
   /** Memoized positional gram frame over the session's corpus. Storage
     * posture measured at ×100 (NOTES.md round 15, three variants):
     * serving the fixture UNPERSISTED re-scans 883 MB of parquet per
@@ -492,7 +504,7 @@ object TextAnalysis {
   private[operators] def gramFrame(s: SparkSession, dir: String): DataFrame =
     gramCache.getOrElseUpdate((s, dir, "pos"),
       (graft.FixtureStore.peek("grams", dir) match {
-        case Some(root) => s.read.parquet(s"$root/pos")
+        case Some(root) => Ingest.parquet(s, s"$root/pos", GramPosSchema)
         case None => posGramsOf(docs(s, dir))
       }).persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
 
@@ -500,7 +512,7 @@ object TextAnalysis {
   private[operators] def gramSet(s: SparkSession, dir: String): DataFrame =
     gramCache.getOrElseUpdate((s, dir, "dist"),
       (graft.FixtureStore.peek("grams", dir) match {
-        case Some(root) => s.read.parquet(s"$root/dist")
+        case Some(root) => Ingest.parquet(s, s"$root/dist", GramDistSchema)
         case None => gramFrame(s, dir).select(col("doc_id"), col("g")).distinct()
       }).persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
 

@@ -97,5 +97,7 @@ class LedgerSpec extends SparkSpec {
     assert(r.fingerprint.contains("DataWritingCommand"), r.fingerprint)
     assert(r.jobs >= 1 && r.tasks >= 1, r.toJson)
     assert(r.pauseS >= 0.0)
+    assert(r.deserS >= 0.0, r.toJson)
+    assert(r.toJson.contains("\"deser_s\":"), r.toJson)
   }
 }

@@ -5,8 +5,9 @@ import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local session for specs. It shares with Verify/Bench
-  * ([[GraftSession.build]]) the time zone, the extensions, nanosAsLong and
-  * the codegen cache size. It does NOT share three settings:
+  * ([[GraftSession.build]]) the time zone, the extensions, nanosAsLong,
+  * the codegen cache size and the lean Hadoop configuration
+  * ([[GraftSession.leanHadoopConf]]). It does NOT share three settings:
   *   - `spark.sql.join.preferSortMergeJoin` stays at Spark's default
   *     (true), where the engine sets false; BucketedJoinSpec asserts
   *     `SortMergeJoinExec`;
@@ -25,20 +26,27 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
 
 object SparkSpec {
   // One session per JVM: forked test JVM reuses it across suites.
-  lazy val session: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.extensions", "graft.plans.GraftSparkExtensions")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    // static conf: the suite's working set of generated classes is far
-    // above Spark's default of 100 (GraftSession.CodegenCacheEntries)
-    .config("spark.sql.codegen.cache.maxEntries",
-      GraftSession.CodegenCacheEntries.toLong)
-    // static conf: bucketed-table specs write managed tables here
-    .config("spark.sql.warehouse.dir",
-      java.nio.file.Files.createTempDirectory("graft-warehouse").toString)
-    .getOrCreate()
+  lazy val session: SparkSession = {
+    val spark = SparkSession.builder()
+      .master("local[4]")
+      .appName("graft-test")
+      .config("spark.sql.shuffle.partitions", "4")
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.ui.enabled", "false")
+      .config("spark.sql.extensions", "graft.plans.GraftSparkExtensions")
+      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+      // static conf: the suite's working set of generated classes is far
+      // above Spark's default of 100 (GraftSession.CodegenCacheEntries)
+      .config("spark.sql.codegen.cache.maxEntries",
+        GraftSession.CodegenCacheEntries.toLong)
+      // HadoopConfSpec: a spark.hadoop.* key survives the lean conf (this
+      // one restates core-default.xml's own value)
+      .config("spark.hadoop.fs.permissions.umask-mode", "022")
+      // static conf: bucketed-table specs write managed tables here
+      .config("spark.sql.warehouse.dir",
+        java.nio.file.Files.createTempDirectory("graft-warehouse").toString)
+      .getOrCreate()
+    GraftSession.leanHadoopConf(spark)
+    spark
+  }
 }

@@ -392,8 +392,12 @@ class DedupSimilaritySpec extends SparkSpec {
     val inline = sorted(Dedup.incrIndex.run(spark, dir))
     // 2. obtain the persisted base index, re-run — values must be
     //    identical (the merge theorem served from storage)
-    Dedup.baseIndexWrite(spark, dir)
+    val root = Dedup.baseIndexWrite(spark, dir)
     assert(graft.FixtureStore.peek("dedupbase", dir).nonEmpty)
+    // the serve path reads the stored tables under declared schemas
+    def fields(st: org.apache.spark.sql.types.StructType) = st.map(f => f.name -> f.dataType)
+    assert(fields(spark.read.parquet(s"$root/baseidx").schema) === fields(Dedup.BaseIdxSchema))
+    assert(fields(spark.read.parquet(s"$root/meta").schema) === fields(Dedup.BaseMetaSchema))
     val served = Dedup.incrIndex.run(spark, dir)
     assert(sorted(served) === inline,
       "fixture-served incr index diverges from the inline rebuild")

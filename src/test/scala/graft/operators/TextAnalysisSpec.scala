@@ -33,6 +33,29 @@ class TextAnalysisSpec extends SparkSpec {
     TextAnalysis.releaseSession(spark)
   }
 
+  test("gram fixture: the served frames read the stored tables under their declared schemas") {
+    val dir = sf("sf0.001")
+    def fields(st: org.apache.spark.sql.types.StructType) = st.map(f => f.name -> f.dataType)
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(_.toSeq.map(String.valueOf).mkString(" ")).sorted.toSeq
+    TextAnalysis.releaseSession(spark)
+    val root = TextAnalysis.gramFixtureWrite(spark, dir)
+    try {
+      assert(fields(spark.read.parquet(s"$root/pos").schema) ===
+        fields(TextAnalysis.GramPosSchema))
+      assert(fields(spark.read.parquet(s"$root/dist").schema) ===
+        fields(TextAnalysis.GramDistSchema))
+      val fresh = TextAnalysis.posGramsOf(
+        graft.sources.Tables.load(spark, dir, "documents"))
+      assert(rows(TextAnalysis.gramFrame(spark, dir)) === rows(fresh))
+      assert(rows(TextAnalysis.gramSet(spark, dir)) ===
+        rows(fresh.select("doc_id", "g").distinct()))
+    } finally {
+      TextAnalysis.releaseSession(spark)
+      graft.FixtureStore.dropMemo("grams", dir)
+    }
+  }
+
   test("langid recovers labels on a corpus with distinct marker distributions") {
     // the classifier's own marker vocabulary, as bare words (markers are
     // matched as " word ", so joining words with single spaces produces
