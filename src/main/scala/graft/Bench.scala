@@ -383,6 +383,18 @@ object Bench {
         val (r1, r2) = records(k)
         s"[${r1.compiles},${r2.map(_.compiles).getOrElse(-1L)}]"
       }
+      // each pass's cold costs (and the fixture builds'), summed over
+      // its records: where a first pass's surplus over the second goes,
+      // split into generated-code compiles, class loading and JIT
+      def jvmSums(rs: Seq[Ledger.Record]): String = {
+        val jit = if (rs.exists(_.jitMs < 0)) -1L else rs.map(_.jitMs).sum
+        s"""{"codegen_compiles":${rs.map(_.compiles).sum},"codegen_s":${
+          fmt(rs.map(_.codegenS).sum)},"classes_loaded":${
+          rs.map(_.classesLoaded).sum},"jit_ms":$jit}"""
+      }
+      val passRecords = results.map { case (k, _) => records(k) }
+      val jvmSumsJson = s"""{"fixtures":${jvmSums(fixtureRecords.values.toSeq)},"p1":${
+        jvmSums(passRecords.map(_._1))},"p2":${jvmSums(passRecords.flatMap(_._2))}}"""
       val ledgerJson = perQuery(k => record(k).toJson)
       val ledgerP1Json = perQuery(k => records(k)._1.toJson)
       val fixtureLedgerJson = fixtureRecords
@@ -392,7 +404,7 @@ object Bench {
       val sidecar =
         s"""{"total_s":$total,"n":${results.size},"failed":$failedCount,"sf":$sf,"timing":"best_of_2","total_p1_s":$totalP1,"end_to_end_s":$endToEndS,$loadFields,""" +
           s"""$fixtureRaw,""" +
-          s""""queries":$qs,"passes":$raw,"storage_after_mb":$storageJson,"steal_pct":$stealJson,"codegen_compiles":$compilesJson,"ledger":$ledgerJson,"ledger_p1":$ledgerP1Json,"fixture_ledger":$fixtureLedgerJson}"""
+          s""""queries":$qs,"passes":$raw,"storage_after_mb":$storageJson,"steal_pct":$stealJson,"codegen_compiles":$compilesJson,"jvm_sums":$jvmSumsJson,"ledger":$ledgerJson,"ledger_p1":$ledgerP1Json,"fixture_ledger":$fixtureLedgerJson}"""
       java.nio.file.Files.write(
         java.nio.file.Paths.get("bench_last.json"),
         sidecar.getBytes(java.nio.charset.StandardCharsets.UTF_8))

@@ -29,12 +29,55 @@ object GraftSession {
     */
   val CodegenCacheEntries: Int = 5000
 
+  /** The builder confs that let the cache above serve a generated class
+    * to every query that generates its source, so that each distinct
+    * class compiles once per JVM. Spark keys the cache by (the compiling
+    * thread's context class loader, the source text); two Spark defaults
+    * split that key for identical code:
+    *   - `spark.sql.artifact.isolation.enabled` (default true) gives each
+    *     session UUID its own `ExecutorClassLoader`, and every
+    *     `persist()`/`cache()` mints a UUID: `CacheManager.cacheQuery`
+    *     plans the cached frame in a clone of the session
+    *     (`getOrCloneSessionWithConfigsOff`, which turns off
+    *     auto-bucketed scans and final-stage shuffle optimizations for
+    *     cached plans), and a clone is a new session. Tasks of the
+    *     cached plan's jobs then compile under the clone's loader, so
+    *     a query that caches recompiles its code on every run, each
+    *     time under a new loader, and compiles slower than under the
+    *     application loader. Off, every task compiles under the
+    *     application loader. The engine adds no jar, file or artifact
+    *     to a session (`addJar`, `addFile`, `addArtifact`), so no
+    *     session has artifacts of its own to isolate. The clone itself
+    *     stays: the confs it turns off shape the cached plans.
+    *   - `spark.sql.codegen.useIdInClassName` (default true) names each
+    *     whole-stage class after its codegen stage id. AQE creates query
+    *     stages, and so numbers codegen stages, in a run-dependent order,
+    *     so the same code reappears under a new name and misses the
+    *     cache. Off, the id stays in the generated code's comment only,
+    *     and stack traces show `GeneratedIteratorForCodegenStage` without
+    *     it.
+    * Together, on a full-surface Bench at sf0.001 (4 vCPUs), they cut
+    * the first pass from about 3,314 compiles and 14.7 s of compile time
+    * to 2,328 and 7.6–7.9 s, and the warm pass from about 400 compiles
+    * to 18–24. All three are set on the builder: the cache size and the
+    * isolation flag are static confs.
+    */
+  val CodegenConfs: Map[String, String] = Map(
+    "spark.sql.codegen.cache.maxEntries" -> CodegenCacheEntries.toString,
+    "spark.sql.artifact.isolation.enabled" -> "false",
+    "spark.sql.codegen.useIdInClassName" -> "false")
+
   /** Generated classes compiled in this JVM so far: one per miss of the
     * cache above.
     */
   def codegenCompiles(): Long =
     org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME
       .getCount
+
+  /** Seconds spent compiling generated classes in this JVM so far. */
+  def codegenSeconds(): Double =
+    org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
+      .compileTime / 1e9
 
   /** Derive the shuffle-partition upper bound from the input's on-disk
     * size: ceil(bytes / target), floored at the core count. The target
@@ -110,8 +153,7 @@ object GraftSession {
       // default heap; default interval is 30 min). Two minutes keeps the
       // reclaim cadence well under the accretion rate at any heap size.
       .config("spark.cleaner.periodicGC.interval", "2min")
-      .config("spark.sql.codegen.cache.maxEntries",
-        CodegenCacheEntries.toLong)
+      .config(CodegenConfs)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // Record the embeddings corpus size for LSH geometry auto-sizing
@@ -181,6 +223,16 @@ object GraftSession {
     * conf from its resources, which silently restores every dropped
     * default. Loading the local FileSystem's services registers
     * hdfs-default.xml that way, so they are loaded first.
+    *
+    * `Configuration.unset` drops a value but keeps the key's record of
+    * where it came from (the private `updatingResource` map, which
+    * `getPropertySources` reads), and every `new Configuration(conf)`
+    * copies that map: after the unsets it still held about 1,074 records
+    * for 52 live keys, and a copy (one per `newHadoopConf()`: per file
+    * index, scan and write) cost 48 µs against 9 µs with the map pruned
+    * (JDK 17, 4 vCPUs). Hadoop has no public call for this, so the records of the
+    * dropped keys go through reflection; on a Hadoop without the field
+    * the prune is skipped and only the copies stay slower.
     */
   def leanHadoopConf(spark: SparkSession): Unit = {
     val conf = spark.sparkContext.hadoopConfiguration
@@ -190,7 +242,23 @@ object GraftSession {
         .exists(s => s.nonEmpty && s.forall(_.endsWith("-default.xml")))
     }.toList
     defaults.foreach(conf.unset)
+    pruneSourceRecords(conf)
   }
+
+  /** Drop the source records of keys `conf` no longer holds. */
+  private def pruneSourceRecords(conf: org.apache.hadoop.conf.Configuration): Unit =
+    try {
+      val field = classOf[org.apache.hadoop.conf.Configuration]
+        .getDeclaredField("updatingResource")
+      field.setAccessible(true)
+      conf.synchronized {
+        val live = conf.iterator.asScala.map(_.getKey).toSet
+        field.get(conf).asInstanceOf[java.util.Map[String, Array[String]]]
+          .keySet.removeIf(k => !live.contains(k))
+      }
+    } catch {
+      case _: ReflectiveOperationException | _: RuntimeException => ()
+    }
 
   private def suppressByDesignCheckpointWarning(): Unit = {
     import org.apache.logging.log4j.{Level, LogManager}

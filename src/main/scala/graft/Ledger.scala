@@ -37,7 +37,13 @@ import org.apache.spark.sql.util.QueryExecutionListener
   *     fingerprint is the final plan's alone: the caller's, else the last
   *     one reported;
   *   - pauses: a 1 ms sleeper thread sums every wake-up later than 5 ms,
-  *     the host stalls that neither wall clock nor steal% shows.
+  *     the host stalls that neither wall clock nor steal% shows;
+  *   - the JVM's cold costs over the query's window: generated classes
+  *     compiled and the seconds spent compiling them (`codegen_s`),
+  *     classes loaded (`classes_loaded`) and JIT compile time
+  *     (`jit_ms`, -1 where the JVM does not measure it). Like the
+  *     compile count they are JVM-wide, so they are exact only while
+  *     one query runs at a time.
   *
   * Usage: `val ledger = new Ledger(spark)`, then per query
   * `ledger.measure(name) { Some(qe) }`, and `ledger.close()` at the end.
@@ -71,6 +77,9 @@ final class Ledger(spark: SparkSession) extends AutoCloseable {
     plans.qes.clear()
     val (steal0, jiffies0) = cpuJiffies()
     val compiles0 = GraftSession.codegenCompiles()
+    val codegenS0 = GraftSession.codegenSeconds()
+    val classes0 = classesLoaded()
+    val jit0 = jitMs()
     val pause0 = pauses.overshootNs.get
     val t0 = System.nanoTime()
     sc.setLocalProperty(ScopeProperty, scope)
@@ -79,6 +88,9 @@ final class Ledger(spark: SparkSession) extends AutoCloseable {
     val wallS = (System.nanoTime() - t0) / 1e9
     val pauseS = (pauses.overshootNs.get - pause0) / 1e9
     val compiles = GraftSession.codegenCompiles() - compiles0
+    val codegenS = GraftSession.codegenSeconds() - codegenS0
+    val classes = classesLoaded() - classes0
+    val jit = if (jit0 < 0) -1L else jitMs() - jit0
     val (steal1, jiffies1) = cpuJiffies()
     GraftInternal.drainListenerBus(sc)
     val sums = Option(tasks.sums.remove(scope)).getOrElse(new Sums)
@@ -99,7 +111,8 @@ final class Ledger(spark: SparkSession) extends AutoCloseable {
       stealPct =
         if (steal0 < 0 || steal1 < 0 || jiffies1 <= jiffies0) -1.0
         else 100.0 * (steal1 - steal0) / (jiffies1 - jiffies0),
-      compiles = compiles,
+      compiles = compiles, codegenS = codegenS, classesLoaded = classes,
+      jitMs = jit,
       storageAfterMb = sc.getRDDStorageInfo
         .map(i => (i.memSize + i.diskSize).toDouble).sum / 1e6,
       topTimeMs = top(ops.map(p => label(p) -> timeMs(p, added))),
@@ -133,7 +146,8 @@ object Ledger extends AdaptiveSparkPlanHelper {
       taskS: Double, cpuS: Double, deserS: Double, inputRows: Long,
       shuffleBytes: Long, shuffleRecords: Long, spillBytes: Long,
       peakExecMemBytes: Long, pauseS: Double, stealPct: Double,
-      compiles: Long, storageAfterMb: Double,
+      compiles: Long, codegenS: Double, classesLoaded: Long, jitMs: Long,
+      storageAfterMb: Double,
       topTimeMs: Seq[(String, Double)], topRows: Seq[(String, Double)],
       fingerprint: String, error: Option[String]) {
 
@@ -147,7 +161,9 @@ object Ledger extends AdaptiveSparkPlanHelper {
         s""""shuffle_bytes":$shuffleBytes,"shuffle_records":$shuffleRecords,""" +
         s""""spill_bytes":$spillBytes,"peak_exec_mem_bytes":$peakExecMemBytes,""" +
         s""""pause_s":${num(pauseS)},"steal_pct":${num(stealPct)},""" +
-        s""""codegen_compiles":$compiles,"storage_after_mb":${num(storageAfterMb)},""" +
+        s""""codegen_compiles":$compiles,"codegen_s":${num(codegenS)},""" +
+        s""""classes_loaded":$classesLoaded,"jit_ms":$jitMs,""" +
+        s""""storage_after_mb":${num(storageAfterMb)},""" +
         s""""top_time_ms":${pairs(topTimeMs)},"top_rows":${pairs(topRows)},""" +
         s""""fingerprint":${str(fingerprint)},"error":${error.map(str).getOrElse("null")}}"""
     }
@@ -166,6 +182,19 @@ object Ledger extends AdaptiveSparkPlanHelper {
     case c if c < ' ' => f"\\u${c.toInt}%04x"
     case c => c.toString
   } + "\""
+
+  /** Classes this JVM has loaded since it started. */
+  private def classesLoaded(): Long =
+    java.lang.management.ManagementFactory.getClassLoadingMXBean.getTotalLoadedClassCount
+
+  /** Milliseconds this JVM's JIT compilers have spent so far; -1 where the
+    * JVM does not measure it.
+    */
+  private def jitMs(): Long = {
+    val jit = java.lang.management.ManagementFactory.getCompilationMXBean
+    if (jit == null || !jit.isCompilationTimeMonitoringSupported) -1L
+    else jit.getTotalCompilationTime
+  }
 
   /** (steal, user..steal) jiffies from /proc/stat's aggregate cpu line;
     * (-1, -1) where it is unreadable. Only the first 8 fields: the kernel

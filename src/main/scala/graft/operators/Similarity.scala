@@ -1,9 +1,10 @@
 package graft.operators
 
 import graft.Q
-import graft.sources.Tables
+import graft.sources.{Ingest, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, IntegerType, LongType, StructField, StructType}
 
 /** Similarity search over the `embeddings` table (`Array[Float]`, 64-dim).
   *
@@ -986,21 +987,32 @@ object Similarity {
   val annIndexPersist: Q = Q("ann_index_persist", annIvfPqOracle) { (s, dir) =>
     import s.implicits._
     val root = ivfPqIndexWrite(s, dir)
-    val cents: Seq[Seq[Long]] = s.read.parquet(s"$root/centroids")
-      .select(col("cid"), col("dim"), col("c"))
+    val cents: Seq[Seq[Long]] = Ingest.parquet(s, s"$root/centroids", CentroidsSchema)
       .as[(Long, Long, Long)].collect()
       .groupBy(_._1).toSeq.sortBy(_._1)
       .map(_._2.sortBy(_._2).map(_._3).toSeq)
-    val cb: Seq[Seq[Seq[Long]]] = s.read.parquet(s"$root/codebooks")
-      .select(col("m"), col("code"), col("dim"), col("c"))
+    val cb: Seq[Seq[Seq[Long]]] = Ingest.parquet(s, s"$root/codebooks", CodebooksSchema)
       .as[(Long, Long, Long, Long)].collect()
       .groupBy(_._1).toSeq.sortBy(_._1)
       .map(_._2.groupBy(_._2).toSeq.sortBy(_._1)
         .map(_._2.sortBy(_._3).map(_._4).toSeq))
-    val postings = s.read.parquet(s"$root/postings")
-      .select(col("vec_id"), col("cid").cast("int").as("cid"), col("codes"))
+    val postings = Ingest.parquet(s, s"$root/postings", PostingsSchema)
+      .select(col("vec_id"), col("cid"), col("codes"))
     ivfPqServe(s, dir, cents, cb, postings)
   }
+
+  /** Declared schemas of the three tables [[ivfPqIndexWrite]] stores, in
+    * column order; [[annIndexPersist]] reads them without a
+    * footer-inference job. The postings' `cid` is the partition column.
+    */
+  private[operators] val CentroidsSchema: StructType = StructType(
+    Seq("cid", "dim", "c").map(StructField(_, LongType)))
+  private[operators] val CodebooksSchema: StructType = StructType(
+    Seq("m", "code", "dim", "c").map(StructField(_, LongType)))
+  private[operators] val PostingsSchema: StructType = StructType(Seq(
+    StructField("vec_id", LongType),
+    StructField("codes", ArrayType(IntegerType)),
+    StructField("cid", IntegerType)))
 
   /** Recall diagnostic: fraction of the exact brute-force top-10 that each
     * approximate method (LSH, IVF, PQ, IVF×PQ) recovers, per query — the

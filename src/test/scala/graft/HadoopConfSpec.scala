@@ -63,6 +63,17 @@ class HadoopConfSpec extends SparkSpec {
     assertLean()
   }
 
+  test("a dropped default leaves no source record behind") {
+    // unset keeps a key's source record, and every copy of the conf
+    // (one per newHadoopConf()) would copy it too
+    for (conf <- Seq(spark.sparkContext.hadoopConfiguration, spark.sessionState.newHadoopConf())) {
+      assert(conf.get("hadoop.tmp.dir") === null)
+      assert(conf.getPropertySources("hadoop.tmp.dir") === null)
+      assert(conf.getPropertySources("fs.AbstractFileSystem.file.impl") != null,
+        "a kept key keeps its record")
+    }
+  }
+
   test("a spark.hadoop.* key survives") {
     // SparkSpec restates core-default.xml's value under spark.hadoop.*
     val conf = spark.sessionState.newHadoopConf()

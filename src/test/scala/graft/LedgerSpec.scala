@@ -100,4 +100,14 @@ class LedgerSpec extends SparkSpec {
     assert(r.deserS >= 0.0, r.toJson)
     assert(r.toJson.contains("\"deser_s\":"), r.toJson)
   }
+
+  test("a record splits the JVM's cold costs: codegen seconds, classes loaded, JIT time") {
+    // a projection no earlier test ran: new generated code
+    val r = run(spark.range(50).selectExpr("id * 31 + 7 AS cold_split_probe"))
+    assert(r.error.isEmpty, r.error)
+    assert(r.compiles > 0 && r.codegenS > 0.0, r.toJson)
+    assert(r.classesLoaded >= 0L && r.jitMs >= 0L, r.toJson)
+    for (k <- Seq("codegen_s", "classes_loaded", "jit_ms"))
+      assert(r.toJson.contains(s"\"$k\":"), r.toJson)
+  }
 }

@@ -6,7 +6,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local session for specs. It shares with Verify/Bench
   * ([[GraftSession.build]]) the time zone, the extensions, nanosAsLong,
-  * the codegen cache size and the lean Hadoop configuration
+  * the codegen confs and the lean Hadoop configuration
   * ([[GraftSession.leanHadoopConf]]). It does NOT share three settings:
   *   - `spark.sql.join.preferSortMergeJoin` stays at Spark's default
   *     (true), where the engine sets false; BucketedJoinSpec asserts
@@ -35,10 +35,10 @@ object SparkSpec {
       .config("spark.ui.enabled", "false")
       .config("spark.sql.extensions", "graft.plans.GraftSparkExtensions")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // static conf: the suite's working set of generated classes is far
-      // above Spark's default of 100 (GraftSession.CodegenCacheEntries)
-      .config("spark.sql.codegen.cache.maxEntries",
-        GraftSession.CodegenCacheEntries.toLong)
+      // the codegen cache's size (static: the suite's working set of
+      // generated classes is far above Spark's default of 100) and the
+      // two confs that keep one class per source (GraftSession.CodegenConfs)
+      .config(GraftSession.CodegenConfs)
       // HadoopConfSpec: a spark.hadoop.* key survives the lean conf (this
       // one restates core-default.xml's own value)
       .config("spark.hadoop.fs.permissions.umask-mode", "022")

@@ -604,6 +604,12 @@ class DedupSimilaritySpec extends SparkSpec {
   }
 
   test("ann_index_persist: the stored index serves the rebuild's exact answer, partition-pruned") {
+    // the serve path reads the stored tables under declared schemas
+    val root = Similarity.ivfPqIndexWrite(spark, dir)
+    def fields(st: org.apache.spark.sql.types.StructType) = st.map(f => f.name -> f.dataType)
+    for ((t, schema) <- Seq("centroids" -> Similarity.CentroidsSchema,
+        "codebooks" -> Similarity.CodebooksSchema, "postings" -> Similarity.PostingsSchema))
+      assert(fields(spark.read.parquet(s"$root/$t").schema) === fields(schema), t)
     val served = Similarity.annIndexPersist.run(spark, dir)
     val fromDisk = served
       .select($"query_id", $"neighbor_id", $"adist", $"rn")
