@@ -79,59 +79,73 @@ object GraftSession {
     org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
       .compileTime / 1e9
 
-  /** Derive the shuffle-partition upper bound from the input's on-disk
-    * size: ceil(bytes / target), floored at the core count. The target
-    * (GRAFT_TARGET_PARTITION_MB, default 6 MiB of compressed parquet ≈
-    * 50–100 MiB of row-format shuffle data after decompression) is what
-    * sizes a partition to fit an executor's memory. The default is
-    * measured, not guessed: at the ×100 smoke (1.57 GB input) the
+  /** The builder conf that binds `file://` in every session's Hadoop
+    * configuration to [[sources.PosixLocalFileSystem]], which sets file
+    * permissions with `java.nio` where Hadoop's `RawLocalFileSystem`,
+    * without its native library (Spark ships none), forks `chmod` for
+    * every file and directory it creates. A JFR recording
+    * (`jdk.ProcessStart`) of a 15-pass graftbench f1_dag run counted
+    * 2,866 such processes, 191 per pass: 1,530 from the output stream of
+    * each task file, `.crc` sidecar and `_SUCCESS`, 1,336 from the
+    * directories of each write's `_temporary` tree and partitions. With
+    * the class bound: none, and graftbench f1_dag `pass_s` fell from
+    * 2.02 to 1.80 s (medians of 12 alternating runs each, 4 vCPUs).
+    * The class is a `LocalFileSystem`, so checksums, `.crc` files and the
+    * permission bits of what is written stay as they were.
+    *
+    * Order matters: Hadoop caches one FileSystem per (scheme, authority,
+    * user) for the whole JVM, and the first `FileSystem.get` picks the
+    * class from its own configuration. A `file://` lookup through a
+    * configuration without this key (`new Configuration()`) before the
+    * session exists caches the class Hadoop finds on the classpath, and
+    * the session then reuses it. So [[build]] touches no FileSystem until
+    * the session exists, and derives its partition count through the
+    * session's own Hadoop configuration.
+    */
+  val LocalFileSystemConf: (String, String) =
+    "spark.hadoop.fs.file.impl" -> classOf[sources.PosixLocalFileSystem].getName
+
+  /** Compressed parquet bytes per shuffle partition, the target of
+    * [[derivedPartitions]]: 6 MiB ≈ 50–100 MiB of row-format shuffle data
+    * after decompression, what sizes a partition to fit an executor's
+    * memory. Measured, not guessed: at the ×100 smoke (1.57 GB input) the
     * heaviest iterative query (dedup_keep's connected-components search)
     * runs 40 s with ≤7 MiB compressed per partition and 66 s with
     * ≥8.2 MiB — the sort buffers of the per-round self-joins start
     * spilling right at the old 8 MiB target, so 6 MiB buys margin while
-    * AQE coalesces whatever is too fine for the cheap queries. Goes
-    * through the Hadoop FileSystem API, so the same derivation works for
-    * hdfs:// / s3a:// URIs on a real cluster, not just the local harness.
-    * A dir that cannot be listed degrades to the core count rather than
+    * AQE coalesces whatever is too fine for the cheap queries.
+    */
+  private val TargetPartitionBytes: Long = 6L << 20
+
+  /** Derive the shuffle-partition upper bound from the input's on-disk
+    * size: ceil(bytes / [[TargetPartitionBytes]]), floored at the core
+    * count. Goes through the Hadoop FileSystem API with the session's
+    * Hadoop configuration, so the same derivation works for hdfs:// /
+    * s3a:// URIs on a real cluster, not just the local harness. A dir
+    * that cannot be listed degrades to the core count rather than
     * failing session construction.
     */
-  private def derivedPartitions(dir: String, cpus: Int): Option[Int] =
+  private def derivedPartitions(
+      spark: SparkSession, dir: String, cpus: Int): Option[Int] =
     try {
       val p = new org.apache.hadoop.fs.Path(dir)
-      val fs = p.getFileSystem(new org.apache.hadoop.conf.Configuration())
-      val bytes = fs.getContentSummary(p).getLength
-      // Knobs, NOT LshPlanes.envInt: this runs before the LSH corpus hint
-      // is recorded below, and touching LshPlanes here would freeze its
-      // geometry at the default
-      val targetBytes = Knobs
-        .envInt("GRAFT_TARGET_PARTITION_MB", 6, 1, 4096).toLong << 20
-      val n = ((bytes + targetBytes - 1) / targetBytes).toInt
+      val bytes = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+        .getContentSummary(p).getLength
+      val n = ((bytes + TargetPartitionBytes - 1) / TargetPartitionBytes).toInt
       val bounded = math.min(math.max(n, cpus), 65536)
       System.err.println(
         s"[graft] derived spark.sql.shuffle.partitions=$bounded " +
-          s"($bytes input bytes / ${targetBytes >> 20} MiB target)")
+          s"($bytes input bytes / ${TargetPartitionBytes >> 20} MiB target)")
       Some(bounded)
     } catch { case _: java.io.IOException => None }
 
   def build(appName: String, dataDir: Option[String] = None): SparkSession = {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    // Shuffle partitions must scale with DATA, not cores: at the shipped
-    // SFs 32 (= cores) is right, but the ×100 scale smoke put 45M distinct
-    // groups through 32 partitions and the spilling aggregation thrashed
-    // for half an hour before dying. AQE coalesces small partitions but
-    // never splits big ones, so the upper bound has to be set here —
-    // derived from input bytes / target partition size when the entry
-    // point knows its data dir; GRAFT_SHUFFLE_PARTITIONS remains the
-    // explicit override.
-    val shufflePartitions = sys.env.get("GRAFT_SHUFFLE_PARTITIONS")
-      .map(_.toInt)
-      .orElse(dataDir.flatMap(derivedPartitions(_, cpus.toInt)))
-      .getOrElse(cpus.toInt)
-      .toString
+    val explicitPartitions = sys.env.get("GRAFT_SHUFFLE_PARTITIONS").map(_.toInt)
     val spark = SparkSession.builder()
       .appName(appName)
       .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shufflePartitions)
+      .config("spark.sql.shuffle.partitions", explicitPartitions.getOrElse(cpus.toInt).toLong)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       // Let the planner pick shuffled-hash joins when its size conditions
@@ -154,36 +168,50 @@ object GraftSession {
       // reclaim cadence well under the accretion rate at any heap size.
       .config("spark.cleaner.periodicGC.interval", "2min")
       .config(CodegenConfs)
+      .config(Map(LocalFileSystemConf))
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    // Shuffle partitions must scale with DATA, not cores: at the shipped
+    // SFs 32 (= cores) is right, but the ×100 scale smoke put 45M distinct
+    // groups through 32 partitions and the spilling aggregation thrashed
+    // for half an hour before dying. AQE coalesces small partitions but
+    // never splits big ones, so the upper bound has to be set here —
+    // derived from input bytes / target partition size when the entry
+    // point knows its data dir, and only now that the session exists (see
+    // LocalFileSystemConf); GRAFT_SHUFFLE_PARTITIONS remains the explicit
+    // override. A runtime conf: every query reads it at planning.
+    if (explicitPartitions.isEmpty)
+      dataDir.flatMap(derivedPartitions(spark, _, cpus.toInt)).foreach { n =>
+        spark.conf.set("spark.sql.shuffle.partitions", n.toLong)
+      }
     // Record the embeddings corpus size for LSH geometry auto-sizing
     // BEFORE any query object initializes (the knob-free path is the
     // sized path — LshPlanes scaladoc). Parquet count() is
     // metadata-only, and the declared schema spares a footer-inference
-    // job; a dir without an embeddings table keeps defaults.
-    dataDir.foreach { dir =>
-      try {
-        val emb = sources.Tables.load(spark, dir, "embeddings")
-        val n = emb.count()
-        Knobs.sizeLshFor(n)
-        System.err.println(s"[graft] LSH corpus hint: $n vectors in $dir")
-        // measured occupancy feeds the sizing too (LshPlanes
-        // .derivedGeometry) — only where it can matter (≤4k keeps the
-        // recall-tuned default geometry regardless), and on a
-        // deterministic ≤64k modulo sample so the instrument pass stays
-        // one bounded codegen scan at any corpus size (concentration is
-        // a ratio — sampling-invariant)
-        if (n > 4000L) {
-          val step = math.max(1L, n / 65536L)
-          val sample = emb.filter(
-            org.apache.spark.sql.functions.col("vec_id") % step === 0)
-          functions.LshSizing.measuredSkew(sample).foreach { s =>
-            Knobs.sizeLshSkew(s)
-            System.err.println(
-              f"[graft] LSH measured bucket concentration: $s%.2f")
-          }
+    // job; a dir without an embeddings table (the f1 raw zone) keeps
+    // defaults, and is asked first, so that Spark does not log a missing
+    // path's stack trace.
+    dataDir.filter(sources.Tables.exists(spark, _, "embeddings")).foreach { dir =>
+      val emb = sources.Tables.load(spark, dir, "embeddings")
+      val n = emb.count()
+      Knobs.sizeLshFor(n)
+      System.err.println(s"[graft] LSH corpus hint: $n vectors in $dir")
+      // measured occupancy feeds the sizing too (LshPlanes
+      // .derivedGeometry) — only where it can matter (≤4k keeps the
+      // recall-tuned default geometry regardless), and on a
+      // deterministic ≤64k modulo sample so the instrument pass stays
+      // one bounded codegen scan at any corpus size (concentration is
+      // a ratio — sampling-invariant)
+      if (n > 4000L) {
+        val step = math.max(1L, n / 65536L)
+        val sample = emb.filter(
+          org.apache.spark.sql.functions.col("vec_id") % step === 0)
+        functions.LshSizing.measuredSkew(sample).foreach { s =>
+          Knobs.sizeLshSkew(s)
+          System.err.println(
+            f"[graft] LSH measured bucket concentration: $s%.2f")
         }
-      } catch { case _: org.apache.spark.sql.AnalysisException => () }
+      }
     }
     // Dedup.releaseCheckpoint unpersists each CC round's localCheckpoint
     // blocks ON PURPOSE (the next round's frame is already materialized, so

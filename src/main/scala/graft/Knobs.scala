@@ -1,11 +1,10 @@
 package graft
 
 /** Engine knob plumbing that must be touchable WITHOUT initializing the
-  * constant objects it feeds. `GraftSession.build` both reads env knobs
-  * (shuffle sizing) and supplies the corpus-size hint that
-  * [[graft.functions.LshPlanes]] resolves its geometry from — so the knob
-  * reader cannot live on `LshPlanes` itself: touching it there would
-  * freeze the geometry before the hint exists.
+  * constant objects it feeds. `GraftSession.build` supplies the
+  * corpus-size hint that [[graft.functions.LshPlanes]] resolves its
+  * geometry from, so the hint cannot live on `LshPlanes` itself: touching
+  * it there would freeze the geometry before the hint exists.
   */
 object Knobs {
 

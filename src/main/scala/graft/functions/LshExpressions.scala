@@ -40,11 +40,6 @@ object LshPlanes {
   // SQL — derives from these constants at JVM init, so the correctness
   // gate stays self-consistent at ANY setting (recall/candidate-volume
   // tradeoffs shift, correctness never).
-  // envInt lives on graft.Knobs (GraftSession reads knobs before the
-  // corpus hint exists, so the reader can't be here); this delegation
-  // keeps the established call sites (Sampling's packing knobs etc.)
-  private[graft] def envInt(name: String, default: Int, lo: Int, hi: Int): Int =
-    graft.Knobs.envInt(name, default, lo, hi)
 
   /** Pure geometry derivation from (corpus rows, measured bucket
     * concentration) — factored out so specs exercise the sizing without

@@ -238,15 +238,13 @@ object Sampling {
 
   /** Sequence-packing geometry. The shard-prefix length bounds the window
     * parallelism (16^chars shards); 2 hex chars = 256 shards covers the
-    * test SFs, and at 100 TB you raise it so a shard's documents fit one
-    * task's sort (chars ≈ log₁₆(corpus_tokens / target_shard_tokens) — the
-    * knob is env-shared with the oracle like the LSH geometry, so the gate
-    * holds at any setting).
+    * shipped scale factors. A corpus whose shard no longer fits one task's
+    * sort needs a longer prefix (chars ≈ log₁₆(corpus_tokens /
+    * target_shard_tokens)); the oracle SQL interpolates the same constant,
+    * so the gate holds at any value.
     */
-  private val PackShardChars: Int =
-    graft.functions.LshPlanes.envInt("GRAFT_PACK_SHARD_CHARS", 2, 1, 8)
-  private val PackBudget: Int =
-    graft.functions.LshPlanes.envInt("GRAFT_PACK_BUDGET", 2048, 16, 1 << 24)
+  private val PackShardChars: Int = 2
+  private val PackBudget: Int = 2048
 
   /** Sequence packing — the concat-and-chunk step that turns a document
     * corpus into fixed-token-budget training sequences (GPT-style
@@ -268,7 +266,7 @@ object Sampling {
     * digest prefix, and the running sum is a single pass per shard. No
     * global order exists anywhere (a single ORDER BY over the corpus would
     * funnel 100 TB through one range sampler); total parallelism is the
-    * shard count, raised via GRAFT_PACK_SHARD_CHARS as the corpus grows.
+    * shard count, 16^[[PackShardChars]].
     */
   val pack: Q = Q("pack_sequences",
     s"""WITH t AS (SELECT doc_id, md5(text) AS dig,
@@ -716,8 +714,13 @@ object Sampling {
         min(when(col("cum") >= expr("(n-1) * 50 div 100 + 1"), col("v"))).as("p50_exact"),
         min(when(col("cum") >= expr("(n-1) * 90 div 100 + 1"), col("v"))).as("p90_exact"),
         min(when(col("cum") >= expr("(n-1) * 99 div 100 + 1"), col("v"))).as("p99_exact"))
-    sq.join(st, Seq("event_type")).join(dr, Seq("event_type"))
-      .join(ex, Seq("event_type"))
+    // all four sides are per-type aggregates; hinted, every join builds
+    // on its right side. Unhinted, AQE picked each build side by which
+    // side's stage had finished first, so the generated join code, and
+    // the plan fingerprint, changed from run to run.
+    sq.join(broadcast(st), Seq("event_type"))
+      .join(broadcast(dr), Seq("event_type"))
+      .join(broadcast(ex), Seq("event_type"))
       .select(col("event_type"), col("n_events"), col("n_days"),
         col("day_registers"), col("occupied"), col("reg_checksum"),
         col("p50_lo"), col("p90_lo"), col("p99_lo"),

@@ -1535,8 +1535,7 @@ object Similarity {
     * family makes, degrading gracefully instead of OOMing. Cells at or
     * under the cap get m = 1 → bit-identical to the uncapped semantics.
     */
-  private val SemCellCap =
-    graft.functions.LshPlanes.envInt("GRAFT_SEM_CELL_CAP", 1000, 2, 10000000)
+  private val SemCellCap = 1000
 
   /** DuckDB replay of the semantic-dedup pipeline: the same measured-K
     * formula, the same [[kmIterSql]] training chain off rank-seeded

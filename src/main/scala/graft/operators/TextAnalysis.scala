@@ -621,15 +621,13 @@ object TextAnalysis {
     * one linear codegen'd scan.
     */
   /** Serialized bloom filter over a single-string-column frame in one
-    * distributed pass. `capacity` is the sizing prior (env-tunable;
-    * benchmarks-per-corpus rarely exceed the default's ~1.2 MB bitset);
-    * if the input turns out to overflow it, one sized rebuild pass runs —
-    * the two-scan shape as the exceptional path instead of the always
-    * path.
+    * distributed pass. `capacity` is the sizing prior (benchmarks-per-corpus
+    * rarely exceed the default's ~1.2 MB bitset); if the input turns out to
+    * overflow it, one sized rebuild pass runs — the two-scan shape as the
+    * exceptional path instead of the always path.
     */
   private[operators] def bloomBytes(evGrams: DataFrame,
-      capacity: Long = graft.Knobs
-        .envInt("GRAFT_BLOOM_CAPACITY", 1000000, 1000, 100000000).toLong)
+      capacity: Long = 1000000L)
       : Array[Byte] = {
     import org.apache.spark.sql.Encoders
     val built = evGrams

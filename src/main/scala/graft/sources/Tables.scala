@@ -94,6 +94,17 @@ object Tables {
     "lineitem" -> lineitem, "events" -> events,
     "documents" -> documents, "embeddings" -> embeddings)
 
+  private def tablePath(sfDir: String, name: String): String =
+    s"$sfDir/$name.parquet"
+
+  /** Whether `sfDir` holds table `name`, asked through the session's
+    * Hadoop FileSystem.
+    */
+  def exists(spark: SparkSession, sfDir: String, name: String): Boolean = {
+    val p = new org.apache.hadoop.fs.Path(tablePath(sfDir, name))
+    p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
+  }
+
   /** Parquet scan with declared schema (SURVEY.md S4). Declaring the schema
     * skips footer-based merging across 100k+ files at scale and guarantees
     * the analyzer's column pruning / filter pushdown target the right types.
@@ -102,7 +113,7 @@ object Tables {
     * unit — see [[eventsTsNanosFactor]].
     */
   def load(spark: SparkSession, sfDir: String, name: String): DataFrame = {
-    val path = s"$sfDir/$name.parquet"
+    val path = tablePath(sfDir, name)
     val df = spark.read.schema(schemas(name)).parquet(path)
     if (name != "events") df
     else {

@@ -6,8 +6,10 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local session for specs. It shares with Verify/Bench
   * ([[GraftSession.build]]) the time zone, the extensions, nanosAsLong,
-  * the codegen confs and the lean Hadoop configuration
-  * ([[GraftSession.leanHadoopConf]]). It does NOT share three settings:
+  * the codegen confs, the `file://` FileSystem
+  * ([[GraftSession.LocalFileSystemConf]]) and the lean Hadoop
+  * configuration ([[GraftSession.leanHadoopConf]]). It does NOT share
+  * three settings:
   *   - `spark.sql.join.preferSortMergeJoin` stays at Spark's default
   *     (true), where the engine sets false; BucketedJoinSpec asserts
   *     `SortMergeJoinExec`;
@@ -39,6 +41,9 @@ object SparkSpec {
       // generated classes is far above Spark's default of 100) and the
       // two confs that keep one class per source (GraftSession.CodegenConfs)
       .config(GraftSession.CodegenConfs)
+      // file:// sets permissions without forking chmod
+      // (PosixLocalFileSystemSpec)
+      .config(Map(GraftSession.LocalFileSystemConf))
       // HadoopConfSpec: a spark.hadoop.* key survives the lean conf (this
       // one restates core-default.xml's own value)
       .config("spark.hadoop.fs.permissions.umask-mode", "022")

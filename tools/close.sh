@@ -18,11 +18,19 @@ TREE=$(tools/check_plans.sh --tree)
 # src/main tree and append the verbatim result to BASELINE.md. Appending
 # (not editing prose) keeps the record append-only and un-breakable by
 # format drift; the newest stamped block is the authoritative count.
-TEST_LOG=$(mktemp)
-trap 'rm -f "$TEST_LOG"' EXIT
+# The log stays in target/ (ignored by git) for a failed run's post-mortem.
+mkdir -p target
+TEST_LOG=target/close-test.log
 if ! sbt -batch test > "$TEST_LOG" 2>&1; then
-  tail -30 "$TEST_LOG"
-  echo "close.sh: TEST SUITE FAILED on src/main tree $TREE — fix before closing" >&2
+  # Each failed or aborted test, under its suite's name, with the lines
+  # ScalaTest indents beneath it (assertion message, source line); then
+  # the run's summary.
+  awk '/^\[info\] [A-Za-z0-9_.]+:$/ { suite = $2; next }
+       /\*\*\* (FAILED|ABORTED) \*\*\*/ { print suite; print; inblock = 1; next }
+       inblock && /^\[info\]   / { print; next }
+       { inblock = 0 }' "$TEST_LOG"
+  tail -15 "$TEST_LOG"
+  echo "close.sh: TEST SUITE FAILED on src/main tree $TREE — fix before closing; log: $TEST_LOG" >&2
   exit 1
 fi
 mkdir -p plans
