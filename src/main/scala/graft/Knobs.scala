@@ -20,23 +20,6 @@ object Knobs {
       v
     }.getOrElse(default)
 
-  /** Conf-first validated integer knob: a session-conf value (runtime- and
-    * test-injectable via `spark.conf.set`) overrides the env var, which
-    * overrides the default. The env var stays the operational surface; the
-    * conf key exists so failure paths guarded by the knob are exercisable
-    * from inside a JVM that cannot mutate its own environment.
-    */
-  def confInt(lookup: String => Option[String], confKey: String,
-      envName: String, default: Int, lo: Int, hi: Int): Int = {
-    def parse(src: String, raw: String): Int = {
-      val v = raw.toIntOption.getOrElse(
-        throw new IllegalArgumentException(s"$src must be an integer, got '$raw'"))
-      require(v >= lo && v <= hi, s"$src must be in [$lo, $hi], got $v")
-      v
-    }
-    lookup(confKey).map(parse(confKey, _)).getOrElse(envInt(envName, default, lo, hi))
-  }
-
   // ---- LSH geometry corpus hint ---------------------------------------
   //
   // The LSH plane tensor is a JVM-lifetime constant (oracle SQL, the

@@ -1,9 +1,13 @@
 package graft.operators
 
 import graft.Q
+import graft.plans.BandedIntervalJoin
 import graft.sources.Tables
+import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.GraftInternal
 
 /** As-of (point-in-time) join — the canonical operator Spark's built-in
   * join set lacks (SURVEY-adjacent extension; the brief's "compose existing
@@ -170,24 +174,62 @@ object AsofJoin {
   private val BandSeconds = 600L
   private val BandMicros = BandSeconds * 1000000L
 
-  /** Exposed for SlidingCountSpec's native-vs-composed parity replay. */
+  /** Exposed for SlidingCountSpec's window-vs-composed parity replay. */
   def BandMicrosForSpec: Long = BandMicros
 
-  /** Banded (bucketed) interval join — the scale path for a time-proximity
-    * join with NO equi-key: for every event, count the other events within
-    * ±10 minutes. Naively this is a pure inequality join, which Spark can
-    * only plan as a nested-loop over the full cross product (O(n²) at any
-    * cluster size). The composed-operator rewrite quantizes time into
-    * fixed ±window-width bands: each probe row explodes to its ≤3
-    * overlapping band ids (map-side, slim rows), the build side keys on
-    * its single band, and the band equi-join + residual |Δt| ≤ W filter
-    * recovers exactly the interval semantics — a true pair shares exactly
-    * one build-side band, so no dedup pass is needed. Shuffle budget: one
-    * hash exchange on band id carrying ~3n slim rows; per-band work is
-    * (band population)², bounded by time density × W, never n². This is
-    * the standard bin-packed range-join optimization, here as a
-    * composition of explode + equi-join (the brief's "compose existing
-    * ops" preference) rather than a custom strategy.
+  /** [[bandCount]]'s partition width, in windows. Each row lands in its
+    * home band and, when its ±W span crosses a band edge (a 2/32 chance),
+    * in one neighbouring band as well. Wider bands cut that ghost share;
+    * narrower ones cut the rows one window task sorts. */
+  private val BandWindows = 32L
+
+  /** Per row of `df`, the count of OTHER rows whose `tCol` lies within ±`w`
+    * — `band_join`'s semantics, read off running counts instead of pairs:
+    * n = F(t+w) − F(t−w−1) − 1, where F(x) counts the rows with time ≤ x.
+    *
+    *   - Each row explodes into the bands ⌊(t−w)/B⌋ … ⌊(t+w)/B⌋ with
+    *     B = 32·w, so every row within ±w of a row shares that row's home
+    *     band ⌊t/B⌋. The band arithmetic is [[BandedIntervalJoin]]'s exact
+    *     floor division and overflow-clamped shift.
+    *   - ONE window partitioned by band and ordered by t holds both F
+    *     frames. They are `UNBOUNDED PRECEDING` frames, which Spark
+    *     evaluates incrementally; a sliding ±w frame would re-aggregate
+    *     its buffer at every row, so its cost would grow with density.
+    *   - Only home-band rows are kept. NULL-t rows land in one NULL band
+    *     (`explode_outer`) and emit 0; NULL ids are never counted
+    *     (`count(id)`) and emit 0, as SQL comparison semantics give.
+    *
+    * Long time column only (timestamps convert to epoch micros upstream).
+    * The count is row-local: every row counts the other rows in its frame.
+    * It equals the `GROUP BY id` oracle when ids are unique, as
+    * `event_id` (the events key) is; rows sharing an id would each count
+    * the other, where the oracle merges them.
+    */
+  def bandCount(df: DataFrame, idCol: String, tCol: String, w: Long,
+      as: String): DataFrame = {
+    require(w > 0L, s"bandCount: window must be positive, got $w")
+    val b = BandWindows * w
+    def bandOf(shift: Long): Column = GraftInternal.column(BandedIntervalJoin.floorDiv(
+      BandedIntervalJoin.safeShift(UnresolvedAttribute.quoted(tCol), shift), b))
+    val (id, t) = (col(idCol), col(tCol))
+    val byT = Window.partitionBy(col("band")).orderBy(t)
+    df.select(id, t, bandOf(0L).as("home"),
+        explode_outer(sequence(bandOf(-w), bandOf(w))).as("band"))
+      .withColumn("n",
+        count(id).over(byT.rangeBetween(Window.unboundedPreceding, w)) -
+          count(id).over(byT.rangeBetween(Window.unboundedPreceding, -(w + 1L))) - 1L)
+      .filter(col("band") <=> col("home"))
+      .select(id, when(id.isNull || t.isNull, 0L).otherwise(col("n")).as(as))
+  }
+
+  /** Proximity self-count with NO equi-key: for every event, count the
+    * other events within ±10 minutes. As a join it is a pure inequality,
+    * which Spark can only plan as a nested loop over the cross product;
+    * [[bandCount]] reads it off one band-partitioned running-count window
+    * instead, so the work is a sort of each band, never a pair per
+    * neighbour. [[graft.plans.BandedIntervalJoin]] keeps the composed
+    * banded-join rewrite for joins that output pairs, and SlidingCountSpec
+    * asserts that the two agree on real data.
     */
   val bandJoin: Q = Q("band_join",
     s"""WITH near AS (
@@ -202,23 +244,15 @@ object AsofJoin {
        |ORDER BY e.event_id""".stripMargin) { (s, dir) =>
     val ev = Tables.load(s, dir, "events")
       .select(col("event_id"), Tables.nanosToMicros("ts").as("t"))
-    // the native whole-operator path ([[graft.plans.SlidingCountExec]]):
-    // ONE range exchange of un-amplified rows + a per-partition two-pointer
-    // sliding window + fringe-resolved cross-partition pairs — retiring the
-    // composed band rewrite's ×3 probe amplification and its residual
-    // filter over every band-mate. The composed form remains available for
-    // arbitrary joins via [[graft.plans.BandedIntervalJoin]], and
-    // NativeSlidingCountSpec asserts native ≡ composed on real data.
-    graft.plans.SlidingCountNode
-      .slidingCount(ev, "event_id", "t", BandMicros, "n_near")
+    bandCount(ev, "event_id", "t", BandMicros, "n_near")
       .orderBy(col("event_id"))
   }
 
   /** Incremental maintenance of the proximity counts — the
-    * [[graft.operators.Dedup]] `dedup_incr_index` contract applied to the
-    * native sliding-count operator: an append-only event log should update
-    * its ±W neighbor counts by touching the APPENDED span and the W-wide
-    * seam, not by recounting history. The corpus splits at its time
+    * [[graft.operators.Dedup]] `dedup_incr_index` contract applied to
+    * [[bandCount]]: an append-only event log should update its ±W
+    * neighbor counts by touching the APPENDED span and the W-wide seam,
+    * not by recounting history. The corpus splits at its time
     * midpoint into base (history) and delta (the append); the merged
     * verdict is
     *
@@ -231,11 +265,10 @@ object AsofJoin {
     * replays the ONE-SHOT recompute over the full table — the hash gate
     * proves merge ≡ rebuild, per event, at every SF.
     *
-    * Scale shape: two native sliding counts (each ONE range exchange of
-    * its half, the [[graft.plans.SlidingCountExec]] audit), a seam join
-    * bounded by 2W of density, and a union-free merge (the halves are
-    * disjoint by construction, so the seam additions LEFT-join onto the
-    * concatenated half counts).
+    * Scale shape: two band counts (one band-partitioned window over each
+    * half), a seam join bounded by 2W of density, and a union-free merge
+    * (the halves are disjoint by construction, so the seam additions
+    * LEFT-join onto the concatenated half counts).
     */
   val proxIncr: Q = Q("prox_incr_merge",
     s"""WITH near AS (
@@ -265,7 +298,7 @@ object AsofJoin {
     // still APPEAR with n_near = 0 (the oracle's LEFT JOIN keeps them):
     // the half filters below would silently drop them, so they rejoin
     // through this pushed-down IsNull branch. (NULL-id rows with a valid
-    // ts need no branch — SlidingCountExec already emits them once with
+    // ts need no branch — bandCount already emits them once with
     // count 0 and never counts them as neighbors, matching the oracle's
     // `b.event_id != a.event_id` null semantics.) All-null corpora
     // short-circuit here (no split point exists — or is needed).
@@ -283,16 +316,14 @@ object AsofJoin {
       (rOf(mid), rOf(mid - BandMicros), rOf(mid + BandMicros))
     def half(pred: org.apache.spark.sql.Column) =
       raw.filter(pred).select(col("event_id"), tExpr.as("t"))
-    val cb = graft.plans.SlidingCountNode
-      .slidingCount(half(col("ts") < rMid), "event_id", "t", BandMicros, "n_half")
-    val cd = graft.plans.SlidingCountNode
-      .slidingCount(half(col("ts") >= rMid), "event_id", "t", BandMicros, "n_half")
+    val cb = bandCount(half(col("ts") < rMid), "event_id", "t", BandMicros, "n_half")
+    val cd = bandCount(half(col("ts") >= rMid), "event_id", "t", BandMicros, "n_half")
     // seam: base rows within W below the split × delta rows within W
     // above it — both raw bounds push to the scans; the pair join keys
     // on the delta row's band (≤2 probe bands per base row), so the seam
     // work is density(2W)², never |base|·|δ|. NULL-id rows are excluded
     // from BOTH sides (a null id never forms a pair in the oracle), where
-    // the half counts get the same exclusion from SlidingCountExec.
+    // the half counts get the same exclusion from bandCount.
     val bb = half(col("ts") < rMid && col("ts") >= rLo)
       .filter(col("event_id").isNotNull)
       .select(col("event_id").as("b_id"), col("t").as("b_t"),
@@ -308,8 +339,10 @@ object AsofJoin {
     val seamAdd = seam.select(col("b_id").as("event_id"))
       .unionByName(seam.select(col("d_id").as("event_id")))
       .groupBy(col("event_id")).agg(count(lit(1)).as("n_cross"))
+    // broadcast the seam (a 2W span of rows): a shuffled join would
+    // re-shuffle every half count on event_id
     cb.unionByName(cd)
-      .join(seamAdd, Seq("event_id"), "left")
+      .join(broadcast(seamAdd), Seq("event_id"), "left")
       .select(col("event_id"),
         (col("n_half") + coalesce(col("n_cross"), lit(0L))).as("n_near"))
       .unionByName(nullRows)

@@ -72,8 +72,8 @@ import org.apache.spark.sql.types.{DayTimeIntervalType, LongType, TimestampType}
   * ranges aren't available at optimization time without CBO histograms,
   * so the rule cannot self-disable; opt out for such a query with
   * spark.sql.optimizer.excludedRules=graft.plans.BandedIntervalJoin.
-  * The same rewrite is available as a manual composition in
-  * `graft.operators.AsofJoin.bandJoin`.
+  * `graft.operators.AsofJoin.bandCount` reuses this rule's [[floorDiv]]
+  * and [[safeShift]] for its band-partitioned running-count window.
   */
 object BandedIntervalJoin extends Rule[LogicalPlan] with PredicateHelper {
 
@@ -203,7 +203,7 @@ object BandedIntervalJoin extends Rule[LogicalPlan] with PredicateHelper {
     * intermediate can overflow for w > 0 (div shrinks magnitude, and the
     * −1 correction only applies when |div| < |e|).
     */
-  private def floorDiv(e: Expression, w: Long): Expression = {
+  private[graft] def floorDiv(e: Expression, w: Long): Expression = {
     val lw = Literal(w, LongType)
     Add(
       IntegralDivide(e, lw),
@@ -224,7 +224,7 @@ object BandedIntervalJoin extends Rule[LogicalPlan] with PredicateHelper {
     * floorDiv, and Sequence (null-explodes to no rows), dropping the row
     * like the original join condition did.
     */
-  private def safeShift(e: Expression, c: Long): Expression =
+  private[graft] def safeShift(e: Expression, c: Long): Expression =
     if (c == 0L) e
     else if (c > 0L) {
       val cap = Literal(Long.MaxValue - c, LongType)

@@ -91,7 +91,6 @@ class GraftSparkExtensions extends (SparkSessionExtensions => Unit) {
     e.injectOptimizerRule(_ => SargableYearFilter)
     e.injectOptimizerRule(_ => BandedIntervalJoin)
     e.injectPlannerStrategy(_ => AsofJoinStrategy)
-    e.injectPlannerStrategy(_ => SlidingCountStrategy)
     e.injectFunction(fn("race_time_seconds", xs => RaceTimeSeconds(xs.head)))
     e.injectFunction(fn("race_time_format", xs => RaceTimeFormat(xs.head)))
     e.injectFunction(fn("race_time_str", xs => RaceTimeStr(xs(0), xs(1), xs(2))))

@@ -5,15 +5,15 @@ import java.sql.Timestamp
 import org.apache.spark.sql.Dataset
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
-/** Streaming twin of the native sliding-count operator
-  * ([[graft.plans.SlidingCountExec]] / the registered `band_join` query):
-  * for every event, the count of OTHER events with event-time within ±W,
-  * emitted once the watermark proves the window complete.
+/** Streaming twin of [[graft.operators.AsofJoin.bandCount]] (the
+  * registered `band_join` query): for every event, the count of OTHER
+  * events with event-time within ±W, emitted once the watermark proves
+  * the window complete.
   *
-  * The batch exec's range-partition + fringe trick has no streaming
-  * analogue (there is no "end of partition" on an unbounded stream), so
-  * the streaming shape is BAND-keyed state — the same quantization the
-  * composed batch rewrite uses, re-purposed for state locality:
+  * The batch count's running-count frames need a band's rows in time
+  * order, which an unbounded stream never completes, so the streaming
+  * shape is W-wide BAND-keyed state — the same quantization the composed
+  * batch rewrite uses, re-purposed for state locality:
   *
   *   - each event e with band b = ⌊t/W⌋ is routed to the three groups
   *     {b−1, b, b+1}, flagged owner in its own band. Any event within ±W
@@ -27,15 +27,14 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   *   - buffered rows evict once the watermark passes t+2W: an unemitted
   *     owner o has t_o + W ≥ watermark > t_f + 2W ⟹ t_f < t_o − W, outside
   *     every remaining window. State per band is therefore bounded by the
-  *     row density of a ~4W time span — corpus-rate-invariant, the same
-  *     bound the batch fringes obey.
+  *     row density of a ~4W time span — corpus-rate-invariant.
   *
   * Lateness contract: rows later than the watermark delay are dropped by
   * Spark before reaching the operator (they would also be dropped by a
   * stream-stream join); the delay must therefore cover the source's
   * measured disorder ([[EventsStream.derivedWatermarkDelay]]).
-  * ProximityStreamSpec asserts stream ≡ batch (`band_join`'s native exec)
-  * on ordered replays of the real events table.
+  * ProximityStreamSpec asserts stream ≡ batch (`band_join`) on ordered
+  * replays of the real events table.
   */
 object ProximityStream {
 
@@ -52,8 +51,8 @@ object ProximityStream {
   private def floorDiv(t: Long, w: Long): Long =
     Math.floorDiv(t, w)
 
-  /** `events` must carry (ts: Timestamp, event_id: Long); ids unique (the
-    * [[graft.plans.SlidingCountNode.slidingCount]] contract). */
+  /** `events` must carry (ts: Timestamp, event_id: Long); ids unique, as
+    * [[graft.operators.AsofJoin.bandCount]]'s oracle parity needs. */
   def proximityCounts(events: Dataset[(Timestamp, Long)], windowMicros: Long,
       watermarkDelay: String = EventsStream.DefaultWatermarkDelay)
       : Dataset[ProxCount] = {

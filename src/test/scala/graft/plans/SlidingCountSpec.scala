@@ -1,150 +1,162 @@
 package graft.plans
 
 import graft.SparkSpec
+import graft.operators.AsofJoin.bandCount
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** The native sliding-count exec: constructed-fixture semantics (window
-  * edges, ties, nulls, cross-partition pairs), plan shape (SlidingCount
-  * over ONE range exchange, no Generate/band explode), and full parity
-  * with the composed banded-join formulation on real data.
+/** The band count behind `band_join` and `prox_incr_merge`
+  * ([[graft.operators.AsofJoin.bandCount]]): brute-force parity on
+  * constructed fixtures (window and band edges, ties, nulls, dense and
+  * sign-straddling times), the row-local reading of a duplicated id, plan
+  * shape (one band-partitioned window with two range frames), its work
+  * bound, and full parity with the composed banded-join formulation on
+  * real data.
   */
 class SlidingCountSpec extends SparkSpec {
 
   import spark.implicits._
 
+  private def counts(df: DataFrame, w: Long): Map[Long, Long] =
+    bandCount(df, "id", "t", w, "n").as[(Long, Long)].collect().toMap
+
+  private def bruteForce(rows: Seq[(Long, Long)], w: Long): Map[Long, Long] =
+    rows.map { case (i, t) =>
+      i -> rows.count { case (j, u) => j != i && math.abs(u - t) <= w }.toLong
+    }.toMap
+
   test("sliding count: brute-force parity on a fixture spanning partitions") {
-    // 400 rows over a span >> window with clustered bursts — the range
-    // exchange (4 test partitions) puts boundary pairs on the fringe path
+    // 400 rows over a span >> window with clustered bursts, so pairs
+    // straddle band edges
     val rows = (0 until 400).map { i =>
       val t = (i / 4).toLong * 100L + (i % 4).toLong * 30L
       (i.toLong, t)
     }
     val W = 75L
-    val df = rows.toDF("id", "t")
-    val got = SlidingCountNode.slidingCount(df, "id", "t", W, "n")
-      .as[(Long, Long)].collect().toMap
-    val expect = rows.map { case (i, t) =>
-      i -> rows.count { case (j, u) => j != i && math.abs(u - t) <= W }.toLong
-    }.toMap
-    assert(got === expect)
+    val expect = bruteForce(rows, W)
+    assert(counts(rows.toDF("id", "t"), W) === expect)
     // sanity: the fixture actually has near pairs and isolated rows
     assert(expect.values.max > 0)
   }
 
   test("sliding count: exact window edges, duplicate times, null time") {
     val df = Seq(
-      (1L, Some(0L)),    // 2 within +10 (t=10 twice); t=11 is outside
-      (2L, Some(10L)),   // duplicates both count
+      (1L, Some(0L)),    // t=10 twice is within W=10
+      (2L, Some(10L)),   // equal times both count
       (3L, Some(10L)),
-      (4L, Some(21L)),   // 11 from t=10: outside W=10... within of t=21: t=10? |21-10|=11 > 10; only pairs with t in [11,31]
+      (4L, Some(21L)),   // 11 from t=10: outside W=10
       (5L, Option.empty[Long]))
       .toDF("id", "t")
-    val got = SlidingCountNode.slidingCount(df, "id", "t", 10L, "n")
-      .as[(Long, Long)].collect().toMap
-    assert(got === Map(1L -> 2L, 2L -> 2L, 3L -> 2L, 4L -> 0L, 5L -> 0L))
+    assert(counts(df, 10L) === Map(1L -> 2L, 2L -> 2L, 3L -> 2L, 4L -> 0L, 5L -> 0L))
   }
 
   test("sliding count: many partitions, partitions narrower than 2W (all fringe)") {
-    // Force a fine range partitioning whose per-partition time span is
-    // BELOW 2W, so every row is fringe and every cross-partition pair
-    // resolves through the distributed bucket-group path — the degenerate
-    // regime the fringe shuffle must still count exactly.
+    // a fine range partitioning whose per-partition time span is below 2W
     val rows = (0 until 600).map(i => (i.toLong, i.toLong * 3L))
     val W = 40L // partition span ≈ 600·3/24 = 75 < 2W = 80
     val df = rows.toDF("id", "t").repartitionByRange(24, col("t"))
-    val got = SlidingCountNode.slidingCount(df, "id", "t", W, "n")
-      .as[(Long, Long)].collect().toMap
-    val expect = rows.map { case (i, t) =>
-      i -> rows.count { case (j, u) => j != i && math.abs(u - t) <= W }.toLong
-    }.toMap
-    assert(got === expect)
+    val expect = bruteForce(rows, W)
+    assert(counts(df, W) === expect)
     assert(expect.values.max >= 26) // dense fixture: real window counts
   }
 
   test("sliding count: negative and sign-straddling times bucket correctly") {
-    // the fringe pair shuffle keys on floorDiv(t, W) — a truncating
-    // division here would split the bucket at 0 and lose pairs that
-    // straddle the sign boundary; fixture forces cross-partition pairs
-    // with t < 0, t = 0, and t > 0 inside one window
+    // the bands are floorDiv(t, 32·W): a truncating division would split
+    // the band at 0 and lose pairs that straddle the sign boundary
     val rows = (-300 until 300).map(i => (i.toLong + 1000L, i.toLong * 7L))
     val W = 50L
     val df = rows.toDF("id", "t").repartitionByRange(12, col("t"))
-    val got = SlidingCountNode.slidingCount(df, "id", "t", W, "n")
-      .as[(Long, Long)].collect().toMap
-    val expect = rows.map { case (i, t) =>
-      i -> rows.count { case (j, u) => j != i && math.abs(u - t) <= W }.toLong
-    }.toMap
-    assert(got === expect)
+    assert(counts(df, W) === bruteForce(rows, W))
   }
 
-  test("sliding count: duplicate ids among fringe rows fail fast") {
-    // Two rows share id 7 and land near partition boundaries (every row
-    // is fringe at this scale) — the unique-id contract guard must abort
-    // instead of silently double-applying cross-partition extras.
-    val df = Seq((7L, 0L), (7L, 10L), (1L, 5L), (2L, 1000L), (3L, 1010L))
-      .toDF("id", "t").repartitionByRange(3, col("t"))
-    val ex = intercept[Exception] {
-      SlidingCountNode.slidingCount(df, "id", "t", 50L, "n").collect()
-    }
-    def messages(e: Throwable): Seq[String] =
-      Option(e).toSeq.flatMap(t => Option(t.getMessage).toSeq ++ messages(t.getCause))
-    assert(messages(ex).exists(_.contains("duplicate id")), ex.toString)
+  test("band count: rows at exact multiples of the band width count across it") {
+    // B = 32·W = 320: rows on, just below and just above each band edge,
+    // including the negative edges, plus pairs exactly W apart across them
+    val W = 10L
+    val B = 32L * W
+    val ts = (-2L to 3L).flatMap(k => Seq(k * B - W, k * B - 1L, k * B, k * B + 1L, k * B + W, k * B + W + 1L))
+    val rows = ts.zipWithIndex.map { case (t, i) => (i.toLong, t) }
+    val expect = bruteForce(rows, W)
+    assert(counts(rows.toDF("id", "t"), W) === expect)
+    assert(expect.values.max === 4L)
   }
 
-  test("sliding count: fringe cap failure fails fast and names the knob") {
-    // 1500-row all-fringe fixture (every partition spans < 2W): with the
-    // cap forced to its 1000 floor via the injectable session conf, the
-    // exec must refuse to run rather than degrade, and the error must
-    // name the ops knob.
+  test("band count: NULL ids emit 0 and are never counted") {
+    val df = Seq(
+      (Some(1L), Some(0L)),
+      (Option.empty[Long], Some(5L)),
+      (Some(2L), Some(8L)),
+      (Option.empty[Long], Option.empty[Long]),
+      (Some(3L), Option.empty[Long]))
+      .toDF("id", "t")
+    val got = bandCount(df, "id", "t", 10L, "n")
+      .as[(Option[Long], Long)].collect().toSeq
+    assert(got.sortBy(_.toString) ===
+      Seq((None, 0L), (None, 0L), (Some(1L), 1L), (Some(2L), 1L), (Some(3L), 0L)).sortBy(_.toString))
+  }
+
+  test("band count: 1500 rows all within W each read 1499") {
     val rows = (0 until 1500).map(i => (i.toLong, i.toLong))
     val df = rows.toDF("id", "t").repartitionByRange(8, col("t"))
-    spark.conf.set("graft.sliding.fringeMax", "1000")
-    try {
-      val ex = intercept[Exception] {
-        SlidingCountNode.slidingCount(df, "id", "t", 2000L, "n").collect()
-      }
-      def messages(e: Throwable): Seq[String] =
-        Option(e).toSeq.flatMap(t => Option(t.getMessage).toSeq ++ messages(t.getCause))
-      assert(messages(ex).exists(m =>
-        m.contains("GRAFT_SLIDING_FRINGE_MAX") && m.contains("graft.sliding.fringeMax")),
-        ex.toString)
-    } finally spark.conf.unset("graft.sliding.fringeMax")
-    // happy path with the cap back at its default: exact result (each row
-    // sees all 1499 others — everything is within W AND on a fringe)
-    val got = SlidingCountNode.slidingCount(df, "id", "t", 2000L, "n")
-      .as[(Long, Long)].collect().toMap
+    val got = counts(df, 2000L)
     assert(got.size === 1500 && got.values.forall(_ === 1499L))
   }
 
-  test("sliding count: malformed fringe cap conf fails loudly, not default") {
-    spark.conf.set("graft.sliding.fringeMax", "lots")
-    try {
-      val df = Seq((1L, 0L), (2L, 5L)).toDF("id", "t")
-      val ex = intercept[Exception] {
-        SlidingCountNode.slidingCount(df, "id", "t", 10L, "n").collect()
-      }
-      def messages(e: Throwable): Seq[String] =
-        Option(e).toSeq.flatMap(t => Option(t.getMessage).toSeq ++ messages(t.getCause))
-      assert(messages(ex).exists(_.contains("must be an integer")), ex.toString)
-    } finally spark.conf.unset("graft.sliding.fringeMax")
+  test("band count: a duplicated id is counted row by row") {
+    // the oracle's GROUP BY id would give id 7 zero (its only neighbour
+    // shares its id); the window counts each row's other rows
+    val df = Seq((7L, 0L), (7L, 1L), (1L, 1000L)).toDF("id", "t")
+    val got = bandCount(df, "id", "t", 10L, "n").as[(Long, Long)].collect().sorted.toSeq
+    assert(got === Seq((1L, 0L), (7L, 1L), (7L, 1L)))
   }
 
-  test("sliding count plan: native exec over ONE range exchange, no band explode") {
+  test("band count work: shuffle records ≤ 1.1 × input at ×1 and ×10 density") {
+    // the ghost copies a row makes when its ±W span crosses a band edge
+    // are about 2/32 of the input; ten copies of every event (offset ids,
+    // ten times the neighbours per row) must not change that share
+    val dir = sf("sf0.01")
+    val W = graft.operators.AsofJoin.BandMicrosForSpec
+    val ev = graft.sources.Tables.load(spark, dir, "events")
+      .select(col("event_id"), graft.sources.Tables.nanosToMicros("ts").as("t"))
+    val ledger = new graft.Ledger(spark)
+    try Seq(1, 10).foreach { copies =>
+      val df = ev.select(col("event_id"), col("t"),
+          explode(sequence(lit(0L), lit(copies - 1L))).as("copy"))
+        .select((col("event_id") + col("copy") * 1000000000L).as("event_id"), col("t"))
+      val n = df.count()
+      val r = ledger.measure(s"band-count-x$copies") {
+        val qe = bandCount(df, "event_id", "t", W, "n").queryExecution
+        qe.toRdd.foreach(_ => ())
+        Some(qe)
+      }
+      assert(r.error.isEmpty, r.error)
+      assert(r.shuffleRecords > 0L && r.shuffleRecords <= n * 11L / 10L,
+        s"x$copies: $n input rows, ${r.shuffleRecords} shuffle records")
+      assert(bandCount(df, "event_id", "t", W, "n").count() === n)
+    } finally ledger.close()
+  }
+
+  test("band_join plan: one band window, two range frames, no nested loop") {
     val dir = sf("sf0.001")
     val q = graft.operators.AsofJoin.bandJoin.run(spark, dir)
     val plan = q.queryExecution.executedPlan.toString
-    assert(plan.contains("SlidingCount"), s"native exec missing:\n$plan")
-    assert(!plan.contains("Generate explode"),
-      s"band explode still present:\n$plan")
-    assert("Exchange rangepartitioning".r.findAllIn(plan).size >= 1, plan)
+    val windows = plan.linesIterator.filter(_.contains("Window [")).toSeq
+    assert(windows.size === 1, plan)
+    assert("RangeFrame".r.findAllIn(windows.head).size === 2, windows.head)
+    assert(windows.head.contains("[band"), windows.head)
+    Seq("SlidingCount", "NestedLoop", "Cartesian").foreach(op =>
+      assert(!plan.contains(op), s"$op in plan:\n$plan"))
   }
 
-  test("prox_incr_merge plan: two native execs, seam filters pushed to the scans") {
+  test("prox_incr_merge plan: two band windows, seam filters pushed to scans") {
     val dir = sf("sf0.001")
     val q = graft.operators.AsofJoin.proxIncr.run(spark, dir)
     val plan = q.queryExecution.executedPlan.toString
-    assert("SlidingCount".r.findAllIn(plan).size >= 2,
-      s"both half counts must use the native exec:\n$plan")
+    val windows = plan.linesIterator.filter(_.contains("Window [")).toSeq
+    assert(windows.size === 2, plan)
+    assert(windows.forall("RangeFrame".r.findAllIn(_).size === 2), windows.mkString("\n"))
+    Seq("SlidingCount", "NestedLoop", "Cartesian").foreach(op =>
+      assert(!plan.contains(op), s"$op in plan:\n$plan"))
     // the seam's half filters must reach the parquet scans as pushed
     // range predicates on ts — the corpus-size-invariance claim
     val pushed = plan.linesIterator.filter(_.contains("PushedFilters")).toSeq

@@ -7,8 +7,8 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.OutputMode
 
-/** Streaming proximity count: the stateful twin of the native batch
-  * sliding-count exec behind `band_join` — watermark-sealed emission,
+/** Streaming proximity count: the stateful twin of the batch band count
+  * behind `band_join` (`AsofJoin.bandCount`) — watermark-sealed emission,
   * band-routed state locality, cross-band pairs, eviction, and full
   * stream ≡ batch parity on the real events table.
   */
