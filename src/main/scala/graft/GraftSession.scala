@@ -213,15 +213,16 @@ object GraftSession {
         }
       }
     }
-    // Dedup.releaseCheckpoint unpersists each CC round's localCheckpoint
-    // blocks ON PURPOSE (the next round's frame is already materialized, so
-    // the truncated lineage is never re-run). Spark warns about exactly
-    // that unpersist ("was locally checkpointed ... cannot be recomputed"),
-    // and those by-design warnings bury real ones in the bench stderr —
-    // DENY that one message by regex instead of silencing the whole
-    // category: an UNHEALTHY run (executor loss recomputing a truncated
-    // lineage) warns through the same logger, and that warning must stay
-    // visible.
+    // SessionMemos.releaseCheckpoint unpersists each iterative round's
+    // localCheckpoint blocks ON PURPOSE (the next round's frame is already
+    // materialized, so the truncated lineage is never re-run), and the
+    // component labels' blocks when their memo family is released. Spark
+    // warns about exactly that unpersist ("was locally checkpointed ...
+    // cannot be recomputed"), and those by-design warnings bury real ones
+    // in the bench stderr — DENY that one message by regex instead of
+    // silencing the whole category: an UNHEALTHY run (executor loss
+    // recomputing a truncated lineage) warns through the same logger, and
+    // that warning must stay visible.
     suppressByDesignCheckpointWarning()
     leanHadoopConf(spark)
     spark

@@ -13,14 +13,14 @@ import scala.collection.mutable.ArrayBuffer
   * query's result has materialized they are dead weight pinning executor
   * storage memory, and across a 100+-query bench run the accumulated
   * MEMORY_AND_DISK blocks force LRU churn against the caches that ARE
-  * meant to live (the dedup family's memoized pair frame). So: queries
+  * meant to live (the dedup family's memoized pair frames). So: queries
   * call [[track]] instead of bare `persist()`, and the entry points
   * (Bench / Verify) call [[release]] after each result materializes —
   * the same contract as `Ingest.QuarantinedRead.release()`.
   *
-  * Deliberately NOT for session-scoped memos (Dedup.pairCache,
-  * Ingest.bucketedTables): their amortization across queries is the
-  * point; they keep their own explicit teardown.
+  * Deliberately NOT for session-scoped memos ([[SessionMemos]]): their
+  * amortization across queries is the point; the store releases them on
+  * its own schedule.
   *
   * Thread-safety: a TrieMap keyed by session with a synchronized buffer
   * per session — entry points are sequential today, but specs run
@@ -38,7 +38,7 @@ object Scratch {
     * session-memoized frame (Dedup.minhashPairs, Graph.coPurchaseEdges)
     * must not enroll it for per-query release — that would silently evict
     * the memo's blocks after the first consumer and every later consumer
-    * would re-pay the build while the memo map still claimed it cached.
+    * would re-pay the build while the memo store still claimed it cached.
     */
   def track(df: DataFrame): DataFrame = {
     if (df.storageLevel != org.apache.spark.storage.StorageLevel.NONE) return df
@@ -51,10 +51,10 @@ object Scratch {
   /** Register an already-`localCheckpoint`'d frame (e.g. the labels out
     * of an iterative search) for release: checkpoint blocks live in the
     * RDD layer, so `unpersist` on the Dataset is a no-op and release must
-    * unpersist the backing LogicalRDD itself — the Dedup.releaseCheckpoint
-    * contract, session-scoped. Callers must be done with the frame by the
-    * next [[release]]: unlike a persist, a released checkpoint CANNOT be
-    * recomputed (its lineage was truncated).
+    * unpersist the backing LogicalRDD itself
+    * ([[SessionMemos.releaseCheckpoint]]), session-scoped. Callers must
+    * be done with the frame by the next [[release]]: unlike a persist, a
+    * released checkpoint CANNOT be recomputed (its lineage was truncated).
     */
   def trackCheckpointed(df: DataFrame): DataFrame = {
     val buf = checkpointed.getOrElseUpdate(df.sparkSession, ArrayBuffer.empty)
@@ -76,13 +76,7 @@ object Scratch {
       buf.synchronized { buf.foreach(_.unpersist(blocking = true)) }
     }
     checkpointed.remove(s).foreach { buf =>
-      buf.synchronized {
-        buf.foreach(_.queryExecution.analyzed.foreach {
-          case lr: org.apache.spark.sql.execution.LogicalRDD =>
-            lr.rdd.unpersist(false)
-          case _ => ()
-        })
-      }
+      buf.synchronized { buf.foreach(SessionMemos.releaseCheckpoint) }
     }
   }
 }

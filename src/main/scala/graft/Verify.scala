@@ -30,7 +30,7 @@ object Verify {
     * the registry so a rename fails loudly.
     */
   val posturedQueries: Seq[String] =
-    (SessionMemos.families.filter(_.name == "grams").flatMap(_.consumers) ++
+    (SessionMemos.Grams.consumers.toSeq ++
       Seq("dedup_incr_index", "ann_index_persist")).sorted
 
   private[graft] def obtainAll(spark: org.apache.spark.sql.SparkSession,

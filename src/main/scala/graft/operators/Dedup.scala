@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.Q
+import graft.SessionMemos.{DedupPairs, releaseCheckpoint}
 import graft.sources.{Ingest, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -361,65 +362,36 @@ object Dedup {
   def minhashCandidates(documents: DataFrame): DataFrame =
     minhashCandidatesFromSig(minhashSignatures(documents))
 
-  /** Per-session memo of the two near-dup PAIR sets — the same
-    * "materialize once, consume everywhere" contract as
-    * [[componentLabels]]: a production pipeline computes its candidate
-    * pairs one time and every downstream consumer (per-doc counts, the
-    * component search, the method-agreement audit) reads that
-    * materialization, so the engine's registered queries do too. The
-    * frames are persisted (MEMORY_AND_DISK): the first consumer pays the
-    * corpus pass, later consumers read back candidate-set-sized frames —
-    * two longs per CANDIDATE PAIR, orders of magnitude below the corpus,
-    * retained for the session's lifetime like every model-sized cache in
-    * this file.
-    */
-  private val pairCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String, String), DataFrame]
-
-  /** Memoized [[minhashSignatures]] over the session's corpus — the
-    * signature build (shingle explode + 4 md5s per shingle + 16-min agg)
-    * is the family's dominant corpus pass, and FOUR consumers derive
+  /** Session memos ([[graft.SessionMemos.DedupPairs]]) of the signatures
+    * and the two near-dup PAIR sets — the same "materialize once, consume
+    * everywhere" contract as [[componentLabels]]: a production pipeline
+    * computes its candidate pairs one time and every downstream consumer
+    * (per-doc counts, the component search, the method-agreement audit)
+    * reads that materialization, so the engine's registered queries do
+    * too. The first consumer pays the corpus pass, later consumers read
+    * back candidate-set-sized frames — two longs per CANDIDATE PAIR,
+    * orders of magnitude below the corpus.
+    *
+    * The signature build (shingle explode + 4 md5s per shingle + 16-min
+    * agg) is the family's dominant corpus pass, and FOUR consumers derive
     * from it ([[minhash]], [[minhashPairs]] behind
     * clusters/keepCanonical/agreement/splitSafe, [[crossEval]]'s corpus
-    * side, [[bucketStats]]); without the memo each paid it again. Rides
-    * [[pairCache]] (same teardown in [[releaseSession]]); the frame is
-    * |docs| × 16 fixed-width hex prefixes — model-per-row, corpus-many
-    * rows, exactly what MEMORY_AND_DISK is for.
+    * side, [[bucketStats]]); the frame is |docs| × 16 fixed-width hex
+    * prefixes — model-per-row, corpus-many rows, exactly what
+    * MEMORY_AND_DISK is for.
     */
   private[operators] def minhashSigs(s: SparkSession, dir: String): DataFrame =
-    pairCache.getOrElseUpdate((s, dir, "minhash_sig"),
-      minhashSignatures(docs(s, dir))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+    DedupPairs.frame(s, dir, "minhash_sig")(minhashSignatures(docs(s, dir)))
 
   /** Memoized [[minhashCandidatesFromSig]] over the session's corpus. */
   private[operators] def minhashPairs(s: SparkSession, dir: String): DataFrame =
-    pairCache.getOrElseUpdate((s, dir, "minhash"),
-      minhashCandidatesFromSig(minhashSigs(s, dir))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+    DedupPairs.frame(s, dir, "minhash")(
+      minhashCandidatesFromSig(minhashSigs(s, dir)))
 
   /** Memoized [[embedNearPairs]] over the session's embedding table. */
   private[operators] def embedPairs(s: SparkSession, dir: String): DataFrame =
-    pairCache.getOrElseUpdate((s, dir, "embed"),
-      embedNearPairs(Similarity.hyperplaneSignatures(s,
-        Tables.load(s, dir, "embeddings")))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-
-  /** Explicit end-of-session teardown for the family memos: unpersists
-    * every pair frame and component-label checkpoint cached for `s` and
-    * drops the map entries, so a long-lived JVM that builds many sessions
-    * (test suites, repeated bench rounds) neither pins dead SparkSessions
-    * through the TrieMap keys nor accretes storage blocks behind LRU.
-    * Entry points call this right before `spark.stop()` — mid-session the
-    * memos' whole point is to stay.
-    */
-  def releaseSession(s: SparkSession): Unit = {
-    pairCache.keys.filter(_._1 eq s).foreach { k =>
-      pairCache.remove(k).foreach(_.unpersist(blocking = false))
-    }
-    componentCache.keys.filter(_._1 eq s).foreach { k =>
-      componentCache.remove(k).foreach(releaseCheckpoint)
-    }
-  }
+    DedupPairs.frame(s, dir, "embed")(embedNearPairs(
+      Similarity.hyperplaneSignatures(s, Tables.load(s, dir, "embeddings"))))
 
   /** Per-document signature prefix + LSH candidate count over `documents`.
     * Candidates come from the session-shared [[minhashPairs]]
@@ -512,33 +484,18 @@ object Dedup {
     labels
   }
 
-  /** Unpersist the RDD backing a `localCheckpoint`'d Dataset (the final
-    * round's labels stay live for the caller; intermediate rounds are
-    * released eagerly rather than waiting for the ContextCleaner).
-    */
-  private[operators] def releaseCheckpoint(df: DataFrame): Unit =
-    // traverse: the label frame is a projection OVER its checkpoint's
-    // LogicalRDD, not the LogicalRDD itself. Safe by construction: the
-    // next round's frame is already eagerly materialized when this runs.
-    df.queryExecution.analyzed.foreach {
-      case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd.unpersist(false)
-      case _ => ()
-    }
-
   /** Per-session memo of the component search: the labels frame is backed
     * by a materialized localCheckpoint, so both consumers of the cluster
     * assignment ([[clusters]] and [[keepCanonical]]) reuse ONE iterative
     * search per (session, dir) instead of re-running it — exactly how a
     * production pipeline consumes a cluster assignment twice. Retention is
-    * two longs per clustered doc for the session's lifetime.
+    * two longs per clustered doc until the `dedup_pairs` family is
+    * released, which frees the checkpoint blocks.
     */
-  private val componentCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-
   private[operators] def componentLabels(s: SparkSession, dir: String): DataFrame =
-    componentCache.getOrElseUpdate((s, dir),
+    DedupPairs.memo(s, dir, "components")(
       connectedComponents(minhashPairs(s, dir))
-        .select(col("id").as("doc_id"), col("label")))
+        .select(col("id").as("doc_id"), col("label")))(releaseCheckpoint)
 
   /** Near-dup clustering end-to-end: MinHash+LSH candidate pairs →
     * connected components → one cluster id (the minimum member doc_id) per

@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.Q
+import graft.SessionMemos.{GraphEdges, releaseCheckpoint}
 import graft.sources.Tables
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -306,31 +307,17 @@ object Graph {
     * in a node-partitioned window (per-node co-purchase degree is
     * corpus-size-invariant, so frames stay bounded).
     */
-  /** Per-session memo of the family's two shared edge derivations — the
-    * [[Dedup]] pair-frame contract: six registered queries re-derived
-    * their edge set independently (~1–2 s of repeated orderkey exchange +
-    * wedge truncation each at sf0.1) while the dedup family shared its
-    * candidate materializations session-wide. First consumer pays the
-    * derivation (first-payer honesty, visible in the bench sidecar's raw
-    * passes); later consumers read an edge-set-sized persisted frame.
-    * Teardown in [[releaseSession]], called by Bench/Verify beside
-    * Dedup.releaseSession.
+  /** Session memos ([[graft.SessionMemos.GraphEdges]]) of the family's
+    * two shared edge derivations — the [[Dedup]] pair-frame contract: six
+    * registered queries re-derived their edge set independently (~1–2 s
+    * of repeated orderkey exchange + wedge truncation each at sf0.1) while
+    * the dedup family shared its candidate materializations session-wide.
+    * First consumer pays the derivation (first-payer honesty, visible in
+    * the bench sidecar's raw passes); later consumers read an
+    * edge-set-sized persisted frame.
     */
-  private val edgeCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String, String), DataFrame]
-
-  /** End-of-session teardown for [[edgeCache]] — the
-    * [[graft.operators.Similarity.releaseSession]] contract. */
-  def releaseSession(s: SparkSession): Unit = {
-    edgeCache.keys.filter(_._1 eq s).foreach { k =>
-      edgeCache.remove(k).foreach(_.unpersist(blocking = false))
-    }
-  }
-
   private[operators] def coPurchaseEdges(s: SparkSession, dir: String): DataFrame =
-    edgeCache.getOrElseUpdate((s, dir, "copurchase"),
-      buildCoPurchaseEdges(s, dir)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+    GraphEdges.frame(s, dir, "copurchase")(buildCoPurchaseEdges(s, dir))
 
   private def buildCoPurchaseEdges(s: SparkSession, dir: String): DataFrame = {
     val li = Tables.load(s, dir, "lineitem")
@@ -625,14 +612,14 @@ object Graph {
     */
   /** The customer–supplier bipartite trade graph as a symmetrized
     * (src, dst) frame, src-partitioned and session-memoized
-    * ([[edgeCache]]) — shared by [[pagerankBig]] and [[bfs]], which each
-    * re-derived the same distinct + union + exchange chain. Partitioning
-    * by src is the layout both consumers' per-round joins key on.
+    * ([[graft.SessionMemos.GraphEdges]]) — shared by [[pagerankBig]] and
+    * [[bfs]], which each re-derived the same distinct + union + exchange
+    * chain. Partitioning by src is the layout both consumers' per-round joins
+    * key on.
     */
   private[operators] def bipartiteEdges(s: SparkSession, dir: String): DataFrame =
-    edgeCache.getOrElseUpdate((s, dir, "bipartite"),
-      buildBipartiteEdges(s, dir).repartition(col("src"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+    GraphEdges.frame(s, dir, "bipartite")(
+      buildBipartiteEdges(s, dir).repartition(col("src")))
 
   private def buildBipartiteEdges(s: SparkSession, dir: String): DataFrame = {
     def t(name: String): DataFrame = Tables.load(s, dir, name)
@@ -664,7 +651,7 @@ object Graph {
       .localCheckpoint()
     for (_ <- 1 to Iters) {
       val next = prRound(pe, nodes, teleport, r).localCheckpoint()
-      Dedup.releaseCheckpoint(r)
+      releaseCheckpoint(r)
       r = next
     }
     r.orderBy(col("r").desc, col("node")).limit(100)
@@ -841,7 +828,7 @@ object Graph {
       val n = next.count()
       if (n == 0) {
         growing = false
-        Dedup.releaseCheckpoint(next)
+        releaseCheckpoint(next)
       } else {
         levels += next
         prev = frontier
@@ -931,7 +918,7 @@ object Graph {
       val n = next.count()
       if (n == 0) {
         growing = false
-        Dedup.releaseCheckpoint(next)
+        releaseCheckpoint(next)
       } else {
         levels += next
         prev = frontier
@@ -1026,7 +1013,7 @@ object Graph {
       .localCheckpoint()
     for (_ <- 1 to LpaIters) {
       val next = lpaRound(se, r).localCheckpoint()
-      Dedup.releaseCheckpoint(r)
+      releaseCheckpoint(r)
       r = next
     }
     graft.Scratch.trackCheckpointed(r)

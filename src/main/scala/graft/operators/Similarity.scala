@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.Q
+import graft.SessionMemos.{AnnRank, SemanticModel}
 import graft.sources.{Ingest, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -1245,12 +1246,9 @@ object Similarity {
     * of (query_id, neighbor_id, cos_sim, rn)) but their LINEAGE is the
     * expensive part — MEMORY_AND_DISK pins the result so the second
     * consumer is a readout, not a rebuild. First consumer pays (the
-    * first-payer honesty convention); teardown in [[releaseSession]],
-    * called by Bench/Verify before `spark.stop()`.
+    * first-payer honesty convention); the frames are the
+    * [[graft.SessionMemos.AnnRank]] family.
     */
-  private val rankCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String, String), DataFrame]
-
   private def rankedMethodQ(method: String): Q = method match {
     case "brute" => knnBrute
     case "lsh"   => annLsh
@@ -1276,26 +1274,7 @@ object Similarity {
   }
 
   private[operators] def rankedTopK(s: SparkSession, dir: String, method: String): DataFrame =
-    rankCache.getOrElseUpdate((s, dir, method),
-      rankedMethodDf(s, dir, method)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-
-  /** End-of-session teardown for the SESSION-scoped memos ([[rankCache]],
-    * [[semModelCache]]) — the [[Dedup.releaseSession]] contract
-    * (mid-session the memo's whole point is to stay). */
-  def releaseSession(s: SparkSession): Unit = {
-    releaseRankMemos(s)
-    semModelCache.keys.filter(_._1 eq s).foreach(semModelCache.remove)
-  }
-
-  /** Release ONLY the ranked-frame memos — the [[graft.SessionMemos]]
-    * per-family hook (the semantic-model cache has different consumers
-    * and no executor storage, so it stays for the session).
-    */
-  def releaseRankMemos(s: SparkSession): Unit =
-    rankCache.keys.filter(_._1 eq s).foreach { k =>
-      rankCache.remove(k).foreach(_.unpersist(blocking = false))
-    }
+    AnnRank.frame(s, dir, method)(rankedMethodDf(s, dir, method))
 
   val annRecall: Q = Q("ann_recall", annRecallOracle) { (s, dir) =>
     import s.implicits._
@@ -1650,17 +1629,15 @@ object Similarity {
       .select(col("vec_id"), quantize(col("embedding")).as("qv"))
       .withColumn("nrm", dotQ(col("qv"), col("qv")))
 
-  private val semModelCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), Seq[Seq[Long]]]
-
   /** The measured-K semantic model for a corpus dir, trained once and
-    * memoized per (session, dir), so both consumers ([[dedupSemantic]],
-    * [[sampleProto]]) share one [[KmIters]]-round training. */
+    * memoized per (session, dir) ([[graft.SessionMemos.SemanticModel]]),
+    * so both consumers ([[dedupSemantic]], [[sampleProto]]) share one
+    * [[KmIters]]-round training. */
   private[operators] def semanticModel(s: SparkSession, dir: String): Seq[Seq[Long]] =
-    semModelCache.getOrElseUpdate((s, dir), {
+    SemanticModel.memo(s, dir, "kmeans") {
       val base = semanticCorpus(s, dir)
       trainCoarse(s, base.select(col("vec_id"), col("qv")), semK(base.count()))
-    })
+    }(_ => ())
 
   /** Full per-document verdict from a (vec_id, qv, nrm) frame — shared by
     * the registered query and the planted-duplicate spec. */

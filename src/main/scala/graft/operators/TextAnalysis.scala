@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.Q
+import graft.SessionMemos.{Bigrams, Grams}
 import graft.sources.{Ingest, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -421,27 +422,6 @@ object TextAnalysis {
       .orderBy(col("dig"), col("doc_id")).limit(EvalSetSize)
       .select(col("doc_id"))
 
-  /** Per-session memo of the corpus word-8-gram frames — FOUR registered
-    * queries re-exploded the corpus into 8-grams independently
-    * ([[decontam]]/[[decontamBloom]], [[dedupSpans]], [[novelty]],
-    * [[boilerplate]]): each paid the tokenize + gram-window + md5 sweep,
-    * the single most expensive corpus projection in this file, at every
-    * run. Same contract as [[graft.operators.Dedup]]'s pairCache: the
-    * first consumer pays the corpus pass, later consumers read the
-    * persisted frame; [[releaseSession]] tears it down with the session.
-    *
-    * Two frames, layered: the POSITIONAL frame (doc_id, p, g) is the one
-    * corpus explode (only [[dedupSpans]] needs positions), and the
-    * DISTINCT frame (doc_id, g) derives from it — so adding the second
-    * memo costs one distinct exchange, never a second corpus scan. Grams
-    * travel exclusively as 16-hex-char (64-bit) md5 prefixes — the
-    * [[novelty]] digest lever, now uniform across all consumers (the
-    * decontam pair's oracles digest identically; a ~n²/2⁶⁵ collision
-    * merges the same grams in both engines).
-    */
-  private val gramCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String, String), DataFrame]
-
   /** Positional digested 8-grams (doc_id, p, g) over any (doc_id, text)
     * frame — the single corpus gram explode behind the memo (also run
     * directly by specs on constructed fixtures). Documents shorter than
@@ -491,30 +471,45 @@ object TextAnalysis {
   private[operators] val GramDistSchema: StructType = StructType(Seq(
     StructField("doc_id", LongType), StructField("g", StringType)))
 
-  /** Memoized positional gram frame over the session's corpus. Storage
-    * posture measured at ×100 (NOTES.md round 15, three variants):
-    * serving the fixture UNPERSISTED re-scans 883 MB of parquet per
-    * consumer pass (family Σ min-of-2 49.1 s vs the memo's 36.4 s), while
-    * the pure in-memory memo re-pays the ~29 s tokenize+md5 derivation
-    * every session. The HYBRID wins both ends: the first consumer loads
-    * the persisted fixture's parquet into the session memo (a columnar
-    * scan, not the corpus derivation), later consumers hit memory, and
-    * later SESSIONS skip the derivation entirely.
+  /** Per-session memo of the corpus word-8-gram frames — FOUR registered
+    * queries re-exploded the corpus into 8-grams independently
+    * ([[decontam]]/[[decontamBloom]], [[dedupSpans]], [[novelty]],
+    * [[boilerplate]]): each paid the tokenize + gram-window + md5 sweep,
+    * the single most expensive corpus projection in this file, at every
+    * run. Same contract as [[graft.operators.Dedup]]'s pair frames: the
+    * first consumer pays the corpus pass, later consumers read the
+    * persisted frame ([[graft.SessionMemos.Grams]]).
+    *
+    * Two frames, layered: the POSITIONAL frame (doc_id, p, g) is the one
+    * corpus explode (only [[dedupSpans]] needs positions), and the
+    * DISTINCT frame (doc_id, g) derives from it — so adding the second
+    * memo costs one distinct exchange, never a second corpus scan. Grams
+    * travel exclusively as 16-hex-char (64-bit) md5 prefixes — the
+    * [[novelty]] digest lever, now uniform across all consumers (the
+    * decontam pair's oracles digest identically; a ~n²/2⁶⁵ collision
+    * merges the same grams in both engines).
+    *
+    * Storage posture measured at ×100 (NOTES.md round 15, three variants):
+    * serving the fixture UNPERSISTED re-scans 883 MB of parquet per consumer
+    * pass (family Σ min-of-2 49.1 s vs the memo's 36.4 s), while the pure
+    * in-memory memo re-pays the ~29 s tokenize+md5 derivation every session.
+    * The HYBRID wins both ends: the first consumer loads the persisted
+    * fixture's parquet into the session memo (a columnar scan, not the corpus
+    * derivation), later consumers hit memory, and later SESSIONS skip the
+    * derivation entirely.
     */
   private[operators] def gramFrame(s: SparkSession, dir: String): DataFrame =
-    gramCache.getOrElseUpdate((s, dir, "pos"),
-      (graft.FixtureStore.peek("grams", dir) match {
-        case Some(root) => Ingest.parquet(s, s"$root/pos", GramPosSchema)
-        case None => posGramsOf(docs(s, dir))
-      }).persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+    Grams.frame(s, dir, "pos")(graft.FixtureStore.peek("grams", dir) match {
+      case Some(root) => Ingest.parquet(s, s"$root/pos", GramPosSchema)
+      case None => posGramsOf(docs(s, dir))
+    })
 
   /** Memoized per-document DISTINCT gram digests (doc_id, g). */
   private[operators] def gramSet(s: SparkSession, dir: String): DataFrame =
-    gramCache.getOrElseUpdate((s, dir, "dist"),
-      (graft.FixtureStore.peek("grams", dir) match {
-        case Some(root) => Ingest.parquet(s, s"$root/dist", GramDistSchema)
-        case None => gramFrame(s, dir).select(col("doc_id"), col("g")).distinct()
-      }).persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+    Grams.frame(s, dir, "dist")(graft.FixtureStore.peek("grams", dir) match {
+      case Some(root) => Ingest.parquet(s, s"$root/dist", GramDistSchema)
+      case None => gramFrame(s, dir).select(col("doc_id"), col("g")).distinct()
+    })
 
   /** Per-document bigram occurrence counts (doc_id, w1, w2, n) over any
     * (doc_id, text) frame — the shared backbone of the bigram-LM pair:
@@ -535,32 +530,7 @@ object TextAnalysis {
   /** Memoized per-document bigram counts: the first consumer derives the
     * frame, later consumers in the session read the persisted copy. */
   private[operators] def bdFrame(s: SparkSession, dir: String): DataFrame =
-    gramCache.getOrElseUpdate((s, dir, "bd"),
-      bdOf(docs(s, dir))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-
-  /** Release ONLY the bigram memo (the `bigrams` family's
-    * [[graft.SessionMemos]] hook — it must not evict the gram family's
-    * frames, whose consumer block may not have run yet). */
-  def releaseBigramMemo(s: SparkSession): Unit =
-    gramCache.keys.filter(k => (k._1 eq s) && k._3 == "bd").foreach { k =>
-      gramCache.remove(k).foreach(_.unpersist(blocking = false))
-    }
-
-  /** Release ONLY the gram memos (`grams` family hook — the mirror-image
-    * constraint of [[releaseBigramMemo]]). */
-  def releaseGramMemos(s: SparkSession): Unit =
-    gramCache.keys.filter(k => (k._1 eq s) && k._3 != "bd").foreach { k =>
-      gramCache.remove(k).foreach(_.unpersist(blocking = false))
-    }
-
-  /** End-of-session teardown for ALL of this module's memos — the
-    * [[graft.operators.Dedup.releaseSession]] contract; entry points call
-    * it right before `spark.stop()`. */
-  def releaseSession(s: SparkSession): Unit =
-    gramCache.keys.filter(_._1 eq s).foreach { k =>
-      gramCache.remove(k).foreach(_.unpersist(blocking = false))
-    }
+    Bigrams.frame(s, dir, "bd")(bdOf(docs(s, dir)))
 
   // (the former per-query docGrams builder is subsumed by [[gramSet]] —
   // grams now travel as digests everywhere, and the decontam pair's

@@ -1,5 +1,6 @@
 package graft.sources
 
+import graft.SessionMemos.BucketedTables
 import org.apache.spark.sql.{DataFrame, Dataset, SaveMode, SparkSession}
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
@@ -113,6 +114,7 @@ object Ingest {
     * Elasticsearch as JSON documents (`Code Big Data Project.py:401-454`);
     * without network egress the engine-side equivalent is the JSON-lines
     * sink (same `{field: value}` documents elasticsearch-hadoop would POST).
+    * The bulk-index path itself is [[graft.sources.bulksink.BulkSink]].
     */
   def writeJsonDocs(df: DataFrame, path: String): Unit =
     df.write.mode(SaveMode.Overwrite).json(path)
@@ -122,71 +124,6 @@ object Ingest {
     */
   def prepareForIndexing(df: DataFrame, dropCols: String*): DataFrame =
     df.na.fill(0).drop(dropCols: _*)
-
-  /** Accounting from a [[bulkIndex]] run. `failedBatches`/`failedDocs`
-    * record batches that exhausted their attempts — the job completes and
-    * the caller decides whether a lossy index run is acceptable (the same
-    * quarantine-over-crash stance as [[jsonWithQuarantine]]).
-    */
-  final case class IndexReport(
-      docs: Long, batches: Long, retries: Long,
-      failedBatches: Long, failedDocs: Long)
-
-  /** S8 proper: `foreachPartition`-batched bulk indexing, the operational
-    * shape of the reference's Elasticsearch loader (`Code Big Data
-    * Project.py:401-454` builds `{"index": {}}`-framed bulk bodies of N
-    * docs and POSTs per chunk). Zero egress here, so the transport is an
-    * injectable `post: Seq[String] => Unit` (must be serializable — it
-    * ships to executors); rows are serialized to JSON documents with
-    * Spark's codegen'd `toJSON`, grouped into `batchSize` chunks inside
-    * each partition (never a driver-side collect), and each chunk retries
-    * up to `maxAttempts` before being counted as failed.
-    *
-    * Accounting uses Spark accumulators — at-least-once under task
-    * retries, which is the right fidelity for operational counters (the
-    * sink itself is as idempotent as the injected POST; ES bulk with
-    * explicit ids is).
-    *
-    * The first-class form of this sink is the DSv2 write connector
-    * [[graft.sources.bulksink.BulkSink]] (`df.write.format(...)` with
-    * configured transport, native custom metrics, commit-time report) —
-    * this helper remains the minimal programmatic path.
-    */
-  def bulkIndex(df: DataFrame, batchSize: Int = 500, maxAttempts: Int = 3)(
-      post: Seq[String] => Unit): IndexReport = {
-    require(batchSize > 0, s"batchSize must be positive, got $batchSize")
-    require(maxAttempts > 0, s"maxAttempts must be positive, got $maxAttempts")
-    val sc = df.sparkSession.sparkContext
-    val docs = sc.longAccumulator("graft.index.docs")
-    val batches = sc.longAccumulator("graft.index.batches")
-    val retries = sc.longAccumulator("graft.index.retries")
-    val failedBatches = sc.longAccumulator("graft.index.failedBatches")
-    val failedDocs = sc.longAccumulator("graft.index.failedDocs")
-    df.toJSON.foreachPartition { (it: Iterator[String]) =>
-      it.grouped(batchSize).foreach { batch =>
-        var attempt = 1
-        var done = false
-        while (!done) {
-          try {
-            post(batch)
-            done = true
-            batches.add(1)
-            docs.add(batch.size)
-          } catch {
-            case scala.util.control.NonFatal(_) if attempt < maxAttempts =>
-              attempt += 1
-              retries.add(1)
-            case scala.util.control.NonFatal(_) =>
-              done = true
-              failedBatches.add(1)
-              failedDocs.add(batch.size)
-          }
-        }
-      }
-    }
-    IndexReport(docs.value, batches.value, retries.value,
-      failedBatches.value, failedDocs.value)
-  }
 
   /** S6-adjacent bucketed sink: a managed parquet table hash-bucketed (and
     * bucket-sorted) on the join key. Bucketing is the at-rest half of the
@@ -216,10 +153,9 @@ object Ingest {
     * SESSION then only registers EXTERNAL tables over the stored layout —
     * a catalog DDL, no data movement. Bucketing is metadata: the files
     * carry their bucket ids in their names, and the CREATE TABLE's
-    * CLUSTERED BY spec re-attaches the layout contract in any session.
+    * CLUSTERED BY spec re-attaches the layout contract in any session;
+    * the registration is a [[graft.SessionMemos.BucketedTables]] memo.
     */
-  private val bucketedReady = scala.collection.mutable.Set.empty[(SparkSession, String)]
-
   def bucketedTables(s: SparkSession, dir: String): (String, String) = {
     // tag = sanitized dir + a hash of the RAW dir: two dirs that sanitize
     // to the same string (/x/sf0.1 vs /x/sf0_1) must not share tables —
@@ -247,8 +183,10 @@ object Ingest {
         .select("c_custkey", "c_mktsegment"),
         s"${ct}_fxbuild", s"$tmp/customer", "c_custkey")
     }
-    bucketedReady.synchronized {
-      if (!bucketedReady((s, dir))) {
+    // one registration per (session, dir); the lock keeps a concurrent
+    // first caller from dropping the tables the other just created
+    BucketedTables.synchronized {
+      BucketedTables.memo(s, dir, "tables") {
         s.sql(s"DROP TABLE IF EXISTS $ot")
         s.sql(
           s"""CREATE TABLE $ot (o_orderkey BIGINT, o_custkey BIGINT,
@@ -262,27 +200,10 @@ object Ingest {
              |USING PARQUET
              |CLUSTERED BY (c_custkey) SORTED BY (c_custkey) INTO 8 BUCKETS
              |LOCATION '$root/customer'""".stripMargin)
-        bucketedReady += ((s, dir))
-      }
+        ()
+      }(_ => ())
     }
     (ot, ct)
-  }
-
-  /** Drop `s`'s readiness entries so a long-lived JVM doesn't pin dead
-    * sessions through the memo keys (the tables themselves are on-disk
-    * catalog state and die with the session's warehouse). Same
-    * end-of-session contract as `Dedup.releaseSession`.
-    */
-  def releaseSession(s: SparkSession): Unit = {
-    bucketedReady.synchronized {
-      bucketedReady.filterInPlace { case (sess, _) => !(sess eq s) }; ()
-    }
-    // the on-disk layout fixtures (orc/variant/racezone/dpp/evo copies)
-    // are NOT deleted anymore: they live in the content-stamped
-    // graft.FixtureStore, owned by the corpus version, and the next
-    // session reusing them is the point (the r8 per-session-stranding
-    // concern is gone — at most ONE live dir per family+corpus exists,
-    // stale versions reaped at the next build).
   }
 
   val bucketedJoin: graft.Q = graft.Q("bucketed_join",

@@ -12,9 +12,8 @@ import org.apache.spark.sql.types.{BooleanType, DoubleType, IntegerType, LongTyp
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
 /** DataSource V2 WRITE path for the reference's Elasticsearch bulk sink
-  * (SURVEY.md S8, `Lucas files/Code Big Data Project.py:401-454`),
-  * upgrading [[graft.sources.Ingest.bulkIndex]]'s `foreachPartition`
-  * helper to a first-class `df.write.format(...)` connector:
+  * (SURVEY.md S8, `Lucas files/Code Big Data Project.py:401-454`), the
+  * engine's one bulk-index path, as a `df.write.format(...)` connector:
   *
   *   - rows serialize to JSON documents and POST in `batchSize` bulks,
   *     with `maxAttempts` retries per bulk and failed-bulk QUARANTINE

@@ -515,7 +515,7 @@ object EventsStream {
   /** `foreachBatch` sink wiring: each micro-batch arrives as a plain
     * DataFrame plus a monotonically increasing `batchId` — the pattern for
     * sinks Spark has no native connector for (JDBC upsert, bulk indexers
-    * like [[graft.sources.Ingest.bulkIndex]]). Exactly-once lands on the
+    * like [[graft.sources.bulksink.BulkSink]]). Exactly-once lands on the
     * CALLER's idempotence: after a crash the engine replays the last
     * uncommitted batch with the SAME batchId, so a writer that keys on
     * (batchId) or upserts by natural key deduplicates the replay — that

@@ -26,11 +26,11 @@ class TextAnalysisSpec extends SparkSpec {
     // same instance on re-request (the memo actually memoizes)...
     assert(TextAnalysis.gramFrame(spark, dir) eq memo)
     // ...and a fresh, equal instance after release (no stale cache entry)
-    TextAnalysis.releaseSession(spark)
+    graft.SessionMemos.Grams.release(spark)
     val rebuilt = TextAnalysis.gramFrame(spark, dir)
     assert(!(rebuilt eq memo))
     assert(rows(rebuilt).toSeq === rows(fresh).toSeq)
-    TextAnalysis.releaseSession(spark)
+    graft.SessionMemos.Grams.release(spark)
   }
 
   test("gram fixture: the served frames read the stored tables under their declared schemas") {
@@ -38,7 +38,7 @@ class TextAnalysisSpec extends SparkSpec {
     def fields(st: org.apache.spark.sql.types.StructType) = st.map(f => f.name -> f.dataType)
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(_.toSeq.map(String.valueOf).mkString(" ")).sorted.toSeq
-    TextAnalysis.releaseSession(spark)
+    graft.SessionMemos.Grams.release(spark)
     val root = TextAnalysis.gramFixtureWrite(spark, dir)
     try {
       assert(fields(spark.read.parquet(s"$root/pos").schema) ===
@@ -51,7 +51,7 @@ class TextAnalysisSpec extends SparkSpec {
       assert(rows(TextAnalysis.gramSet(spark, dir)) ===
         rows(fresh.select("doc_id", "g").distinct()))
     } finally {
-      TextAnalysis.releaseSession(spark)
+      graft.SessionMemos.Grams.release(spark)
       graft.FixtureStore.dropMemo("grams", dir)
     }
   }

@@ -109,36 +109,6 @@ class IngestSpec extends SparkSpec {
     assert(ds.count() === 1)
   }
 
-  test("bulkIndex batches per partition and accounts every document") {
-    IngestSpec.reset()
-    val df = (1L to 23L).map(i => (i, s"doc$i")).toDF("id", "name").coalesce(1)
-    val report = Ingest.bulkIndex(df, batchSize = 5)(IngestSpec.recordingPost)
-    assert(report === Ingest.IndexReport(23, 5, 0, 0, 0))
-    import scala.jdk.CollectionConverters._
-    val sizes = IngestSpec.posted.asScala.toSeq.sorted
-    assert(sizes === Seq(3, 5, 5, 5, 5), "batch shape: four full chunks + tail")
-  }
-
-  test("bulkIndex retries transient failures and still indexes everything") {
-    IngestSpec.reset()
-    val df = (1L to 12L).map(i => (i, s"doc$i")).toDF("id", "name").coalesce(1)
-    val report = Ingest.bulkIndex(df, batchSize = 5, maxAttempts = 3)(
-      IngestSpec.failFirstAttemptPost)
-    // 3 batches, each failing once before succeeding
-    assert(report === Ingest.IndexReport(12, 3, 3, 0, 0))
-  }
-
-  test("bulkIndex quarantines a batch that exhausts its attempts") {
-    IngestSpec.reset()
-    val df = (1L to 10L).map(i => (i, if (i == 7) "poison" else s"doc$i"))
-      .toDF("id", "name").coalesce(1)
-    val report = Ingest.bulkIndex(df, batchSize = 5, maxAttempts = 2)(
-      IngestSpec.poisonPost)
-    // the poison batch retries once (maxAttempts=2) then fails; the other
-    // batch of 5 lands
-    assert(report === Ingest.IndexReport(5, 1, 1, 1, 5))
-  }
-
   test("orc_roundtrip preserves values through the ORC sink/source, pruned scan") {
     import spark.implicits._
     val dir = sf("sf0.001")
@@ -173,7 +143,7 @@ class IngestSpec extends SparkSpec {
     val out = Ingest.orcPartCopy(spark, dir)
     val fixtureDir = new java.io.File(out).getParentFile
     assert(fixtureDir.exists(), s"fixture should exist after build: $fixtureDir")
-    Ingest.releaseSession(spark)
+    graft.SessionMemos.releaseAll(spark)
     assert(fixtureDir.exists(),
       s"fixture dir must SURVIVE release for cross-session reuse: $fixtureDir")
     // and the next consumer serves the same path without a rebuild
@@ -185,30 +155,9 @@ class IngestSpec extends SparkSpec {
     val out = Ingest.raceZoneFixture(spark, dir)
     val fixtureDir = new java.io.File(out).getParentFile
     assert(fixtureDir.exists())
-    Ingest.releaseSession(spark)
+    graft.SessionMemos.releaseAll(spark)
     assert(fixtureDir.exists(),
       s"racezone fixture must survive release: $fixtureDir")
     assert(Ingest.raceZoneFixture(spark, dir) === out)
   }
-}
-
-/** Shared state for the bulkIndex specs: the injected post fn executes on
-  * executor threads (same JVM in local mode), so static concurrent
-  * collections observe its behavior.
-  */
-object IngestSpec {
-  val posted = new java.util.concurrent.ConcurrentLinkedQueue[Int]()
-  private val attempts = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-
-  def reset(): Unit = { posted.clear(); attempts.clear() }
-
-  val recordingPost: Seq[String] => Unit = batch => posted.add(batch.size)
-
-  val failFirstAttemptPost: Seq[String] => Unit = batch =>
-    if (attempts.add(batch.mkString("|")))
-      throw new RuntimeException("transient: first attempt fails")
-
-  val poisonPost: Seq[String] => Unit = batch =>
-    if (batch.exists(_.contains("poison")))
-      throw new RuntimeException("permanent: poison document")
 }

@@ -74,7 +74,7 @@ class RaceZoneSourceSpec extends SparkSpec {
     assert(paths.nonEmpty, "content columns must force real file opens")
     assert(paths.forall(p => !p.contains("_1990_") && !p.contains("_1991_")),
       s"pruned files were opened: $paths")
-    Ingest.releaseSession(spark)
+    graft.SessionMemos.releaseAll(spark)
   }
 
   test("content predicates stay residual and still filter correctly") {

@@ -17,6 +17,15 @@ cd "$(dirname "$0")/.."
 SF_DIR="${1:-/root/testdata/sf0.001}"
 TREE=$(tools/check_plans.sh --tree)
 mkdir -p target
+# Session memos live in one store (graft.SessionMemos). A session-keyed
+# map or set declared anywhere else is a second memo path with its own
+# release hook, which the store's families and releaseAll cannot see.
+if MEMO_MAPS=$(grep -rnE 'TrieMap\.empty\[\(SparkSession|Set\.empty\[\(SparkSession' \
+    src/main --include='*.scala' | grep -v '^src/main/scala/graft/SessionMemos\.scala:'); then
+  echo "$MEMO_MAPS"
+  echo "close.sh: session-keyed memo outside graft.SessionMemos — make it a SessionMemos family" >&2
+  exit 1
+fi
 # The benchmark compiles all of src/main plus its harness with Spark's
 # bundled scalac, not sbt (graftbench/build.py, into the git-ignored
 # graftbench/.work/): a change that breaks only that build, or a harness
